@@ -476,7 +476,8 @@ def _bench_sizing():
     footer stats when the cached corpus exists, else a linear-in-CORPUS_X
     estimate from the 1× corpus's measured footprint. Env vars still
     override (autosize handles that); the decision lands in the bench JSON."""
-    from crawl4ai_scraper_spark.sizing import (InputStats, autosize,
+    from crawl4ai_scraper_spark.sizing import (InputStats, assert_driver_headroom,
+                                               autosize, derive_driver_memory_gb,
                                                parquet_footer_stats)
 
     if (Path(BENCH_WEB) / "_SUCCESS_META").exists():
@@ -484,7 +485,10 @@ def _bench_sizing():
     else:  # first run at this CORPUS_X: corpus not yet synthesized
         stats = InputStats(total_bytes=633_017_359 * CORPUS_X,
                            total_rows=1_790_336 * CORPUS_X, estimated=True)
-    return autosize(stats, CPUS)
+    decision = autosize(stats, CPUS)
+    if not decision.driver_overridden:
+        assert_driver_headroom(derive_driver_memory_gb(stats))
+    return decision
 
 
 def main():

@@ -46,6 +46,7 @@ from crawl4ai_scraper_spark.functions.udfs import (
     visit_and_expand,
 )
 from crawl4ai_scraper_spark.plans.bloom import AnyBloom, might_contain_col
+from crawl4ai_scraper_spark.plans.checkpoint import FRONTIER_FILE_SCHEMA
 from crawl4ai_scraper_spark.plans.politeness import (
     host_budget_cap,
     hygiene_filter,
@@ -55,13 +56,6 @@ from crawl4ai_scraper_spark.plans.politeness import (
 )
 from crawl4ai_scraper_spark.plans.ranking import global_rank
 from crawl4ai_scraper_spark.sources.pages import with_pbucket
-
-FRONTIER_SCHEMA = "url string, host string, depth int, arrival_rank long"
-# What a committed frontier snapshot carries: the queue PLUS the discovering
-# edge (parent_url, link_pos) — so the edges table and the ever-enqueued set
-# are both derivable from frontier snapshots alone, and a round commits three
-# writes (frontier, visited, lineage), not five.
-FRONTIER_FILE_SCHEMA = FRONTIER_SCHEMA + ", parent_url string, link_pos int"
 
 _PROFILE = bool(os.environ.get("SPARK_GRAFT_PROFILE"))
 

@@ -148,9 +148,10 @@ def autosize(
 ) -> SizingDecision:
     """Combine footer stats with env overrides into one sizing decision.
 
-    Env vars WIN when set (the judge-prescribed contract: derived by
-    default, overridable for measurement), but the derived values are still
-    computed and carried in the decision so lineage records both.
+    Env vars WIN when set (derived by default, overridable for
+    measurement), but the derived values are still computed and carried in
+    the decision so lineage records both. Pure: the host-memory check lives
+    in the real-input entry points (``autosize_path``, ``bench.py``).
     """
     env = os.environ if env is None else env
     shuffle = derive_shuffle_partitions(stats, n_cores)
@@ -158,19 +159,20 @@ def autosize(
 
     shuffle_env = env.get("SPARK_GRAFT_SHUFFLE")
     driver_env = env.get("SPARK_DRIVER_MEMORY")
-    decision = SizingDecision(
+    return SizingDecision(
         shuffle_partitions=int(shuffle_env) if shuffle_env else shuffle,
         driver_memory=driver_env if driver_env else f"{driver_gb}g",
         stats=stats,
         shuffle_overridden=bool(shuffle_env),
         driver_overridden=bool(driver_env),
     )
-    if not decision.driver_overridden:
-        assert_driver_headroom(driver_gb)
-    return decision
 
 
 def autosize_path(path: str | Path, n_cores: int,
                   env: Optional[dict] = None) -> SizingDecision:
-    """autosize() over a real parquet input directory."""
-    return autosize(parquet_footer_stats(path), n_cores, env=env)
+    """autosize() over a real parquet input directory, failing fast when
+    the derived (not overridden) heap does not fit this host."""
+    decision = autosize(parquet_footer_stats(path), n_cores, env=env)
+    if not decision.driver_overridden:
+        assert_driver_headroom(derive_driver_memory_gb(decision.stats))
+    return decision

@@ -626,6 +626,7 @@ def test_compact_checkpoint_then_resume(spark, pages3, web3, chk_dir):
     before_edges = sorted(
         (r.parent_url, r.child_url) for r in read_edges(spark, chk_dir, last).collect())
     before_enq = {r.url for r in read_enqueued(spark, chk_dir, last).collect()}
+    assert SEED in before_enq  # the driver-written round-0 frontier is folded too
 
     assert compact_checkpoint(spark, chk_dir) == last
     assert compacted_upto(chk_dir) == last
@@ -788,3 +789,118 @@ def test_deferred_and_eager_stats_paths_agree(spark, pages3, web3, chk_dir):
         fe = sorted(tuple(r) for r in
                     read_frontier(spark, chk_e, rnd).collect())
         assert fd == fe, f"frontier snapshot diverges at round {rnd}"
+
+
+def test_checkpoint_bookkeeping_runs_no_spark_job(spark, chk_dir):
+    """The round-0 commit and building every checkpoint read frame start no
+    Spark job: round 0 is written on the driver, and the readers declare
+    their schemas instead of inferring them from a footer."""
+    from crawl4ai_scraper_spark.plans.checkpoint import (
+        commit_round,
+        read_edges,
+        read_enqueued,
+        read_frontier,
+        read_state,
+    )
+
+    sc = spark.sparkContext
+    group = "checkpoint-bookkeeping"
+    sc.setJobGroup(group, group)
+    try:
+        commit_round(chk_dir, SEED, "site0.example", {"fused": True})
+        frontier = read_frontier(spark, chk_dir, 0)
+        enqueued = read_enqueued(spark, chk_dir, 0)
+        edges = read_edges(spark, chk_dir, 0)
+        visited = read_state(spark, chk_dir, "visited", 0)
+        lineage = read_state(spark, chk_dir, "lineage", 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    assert [tuple(r) for r in frontier.collect()] == [(SEED, "site0.example", 0, 1)]
+    assert [r.url for r in enqueued.collect()] == [SEED]
+    assert edges.count() == 0 and visited.count() == 0 and lineage.count() == 0
+    assert "markdown" in visited.columns  # fused visited schema from the manifest
+
+
+def _fields(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def test_mixed_checkpoint_schemas_equal_declared(spark, pages3, chk_dir):
+    """On a checkpoint with a pyarrow round 0 and Spark-written rounds, the
+    schema Spark infers from the files equals the declared one for every
+    table, and building the read frames over all rounds starts no job."""
+    import glob
+
+    from crawl4ai_scraper_spark.plans.checkpoint import (
+        FRONTIER_FILE_SCHEMA,
+        FUSED_VISITED_SCHEMA,
+        LINEAGE_SCHEMA,
+        _with_round,
+        read_edges,
+        read_enqueued,
+        read_frontier,
+        read_state,
+        round_dir,
+    )
+
+    cfg = CrawlJobConfig(max_depth=3, max_pages=40)
+    res = run_crawl(spark, pages3, SEED, cfg, chk_dir, max_rounds=2, use_bloom=False)
+    last = res.rounds
+    assert last == 2
+
+    frontier_dirs = [os.path.join(round_dir(chk_dir, r), "frontier") for r in range(last + 1)]
+    # the driver-written round 0 alone, then mixed with the Spark rounds
+    assert _fields(spark.read.parquet(frontier_dirs[0]).schema) == \
+        _fields(_with_round(FRONTIER_FILE_SCHEMA))
+    assert _fields(spark.read.parquet(*frontier_dirs).schema) == \
+        _fields(_with_round(FRONTIER_FILE_SCHEMA))
+    state = os.path.join(chk_dir, "state")
+    assert _fields(spark.read.parquet(os.path.join(state, "visited")).schema) == \
+        _fields(_with_round(FUSED_VISITED_SCHEMA))
+    assert _fields(spark.read.parquet(os.path.join(state, "lineage")).schema) == \
+        _fields(_with_round(LINEAGE_SCHEMA))
+    # the round-0 commit writes no delta files
+    assert not glob.glob(os.path.join(state, "*", "round=0"))
+
+    sc = spark.sparkContext
+    group = "checkpoint-reads"
+    sc.setJobGroup(group, group)
+    try:
+        frames = {
+            "frontier": read_frontier(spark, chk_dir, last),
+            "enqueued": read_enqueued(spark, chk_dir, last),
+            "edges": read_edges(spark, chk_dir, last),
+            "visited": read_state(spark, chk_dir, "visited", last),
+            "lineage": read_state(spark, chk_dir, "lineage", last),
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert _fields(frames["visited"].schema) == _fields(_with_round(FUSED_VISITED_SCHEMA))
+    assert _fields(frames["lineage"].schema) == _fields(_with_round(LINEAGE_SCHEMA))
+    assert frames["enqueued"].count() == frames["edges"].count() + 1  # + the seed
+
+
+def _bootstrap_only_resume(spark, pages3, web3, chk_dir, extract):
+    """A crawl stopped right after the round-0 commit (max_rounds=0) leaves
+    a checkpoint with only the driver-written seed frontier; resuming it
+    reaches the oracle-exact final state."""
+    _, _, fetch = web3
+    cfg = CrawlJobConfig(max_depth=2, max_pages=30)
+    boot = run_crawl(spark, pages3, SEED, cfg, chk_dir, max_rounds=0, extract=extract,
+                     use_bloom=False)
+    assert boot.rounds == 0 and boot.visited.count() == 0
+    resumed = run_crawl(spark, pages3, SEED, cfg, chk_dir, resume=True, extract=extract,
+                        use_bloom=False)
+    assert resumed.rounds > 0
+    assert_parity(resumed, oracle_crawl(fetch, SEED, cfg), check_text=extract)
+
+
+def test_bootstrap_only_checkpoint_resumes_fused(spark, pages3, web3, chk_dir):
+    _bootstrap_only_resume(spark, pages3, web3, chk_dir, extract=True)
+
+
+def test_bootstrap_only_checkpoint_resumes_discovery(spark, pages3, web3, chk_dir):
+    _bootstrap_only_resume(spark, pages3, web3, chk_dir, extract=False)

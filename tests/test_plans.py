@@ -446,17 +446,38 @@ def test_dsir_select_takeordered(spark):
 def test_commit_round_footer_stats_and_late_meta(spark, tmp_path):
     """round_write_stats derives the post-commit scalars (frontier rows, max
     sched_ts) from parquet footers — no Spark job — and meta_late lands in
-    the manifest AFTER the overlapped data writes."""
+    the manifest AFTER the data writes, on both commits: the driver-side
+    round-0 commit and commit_round_start."""
     import json
     import os
 
     from crawl4ai_scraper_spark.plans.checkpoint import (
         commit_round,
+        commit_round_start,
         round_dir,
         round_write_stats,
     )
 
     chk = str(tmp_path / "chk")
+    called = {}
+
+    def late(rnd):
+        def hook():
+            f_n, vt = round_write_stats(chk, rnd)
+            called[rnd] = (f_n, vt)
+            return {"frontier_n": f_n, "round_vt": vt}
+        return hook
+
+    def manifest(rnd):
+        return json.load(open(os.path.join(round_dir(chk, rnd), "manifest.json")))
+
+    # round 0: the one-row seed frontier, no visited delta -> vt None
+    commit_round(chk, "https://h/", "h", {"seq_base": 0}, meta_late=late(0))
+    assert called[0] == (1, None)
+    man = manifest(0)
+    assert man["frontier_n"] == 1 and man["round_vt"] is None
+    assert man["seq_base"] == 0 and man["round"] == 0
+
     frontier = spark.createDataFrame(
         [(f"https://h/{i}", 1) for i in range(17)], "url string, depth int"
     )
@@ -466,29 +487,19 @@ def test_commit_round_footer_stats_and_late_meta(spark, tmp_path):
     )
     lineage = spark.createDataFrame([(0, 1)], "pid int, n int")
 
-    called = {}
-
-    def late():
-        f_n, vt = round_write_stats(chk, 0)
-        called["stats"] = (f_n, vt)
-        return {"frontier_n": f_n, "round_vt": vt}
-
-    commit_round(chk, 0, frontier,
-                 {"visited": visits, "lineage": lineage},
-                 {"seq_base": 0}, sizes={"frontier": 17}, meta_late=late)
-
-    assert called["stats"] == (17, 104.0)
-    man = json.load(open(os.path.join(round_dir(chk, 0), "manifest.json")))
+    commit_round_start(chk, 1, frontier, {"visited": visits, "lineage": lineage},
+                       {"seq_base": 1}, sizes={"frontier": 17}).finalize(late(1))
+    assert called[1] == (17, 104.0)
+    man = manifest(1)
     assert man["frontier_n"] == 17 and man["round_vt"] == 104.0
-    assert man["seq_base"] == 0 and man["round"] == 0
+    assert man["seq_base"] == 1 and man["round"] == 1
 
     # empty round: no visited rows -> vt None, frontier 0
-    empty_f = frontier.limit(0)
-    empty_v = visits.limit(0)
-    commit_round(chk, 1, empty_f, {"visited": empty_v, "lineage": lineage},
-                 {"seq_base": 5})
-    f_n, vt = round_write_stats(chk, 1)
-    assert f_n == 0 and vt is None
+    commit_round_start(chk, 2, frontier.limit(0),
+                       {"visited": visits.limit(0), "lineage": lineage},
+                       {"seq_base": 6}).finalize(late(2))
+    assert called[2] == (0, None)
+    assert manifest(2)["frontier_n"] == 0
 
 
 def test_commit_round_start_defers_manifest(spark, tmp_path):
