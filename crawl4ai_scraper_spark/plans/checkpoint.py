@@ -31,15 +31,24 @@ snapshot metadata is mechanical):
 * Reading state back each round truncates the iterative plan lineage — the
   DAG never grows across rounds (SURVEY §4.2).
 
-Spark jobs run only to write round data:
+Two writers produce the same files, and Spark jobs run only in the second:
 
-* Round 0 (``commit_round``) is written on the driver: the one-row seed
-  frontier with pyarrow, in the column types Spark's writer uses, and no
-  files at all for the empty visited / lineage deltas. Rounds ≥ 1
-  (``commit_round_start``) are the only Spark writers.
-* Every reader passes the declared on-disk schema (``FRONTIER_FILE_SCHEMA``,
-  ``VISITED_SCHEMA`` / ``FUSED_VISITED_SCHEMA``, ``LINEAGE_SCHEMA``, each
-  plus ``round``), so building a read frame runs no schema-inference job.
+* The driver writer (``write_round_files``, pyarrow) writes round 0
+  (``commit_round``: the one-row seed frontier, no files for the empty
+  visited / lineage deltas) and every round of the driver-local tier
+  (``plans/local.py``). It writes the declared column types without the
+  Arrow schema blob, keeps statistics only for the columns a reader uses
+  (``STATS_COLUMNS``) and a dictionary only where parquet-mr uses one
+  (``DICT_COLUMNS``), and replaces the round's dirs before it writes.
+* ``commit_round_start`` is the Spark writer, for rounds that run in the
+  Spark tier.
+
+A resume or the next round can follow either writer's round, because
+``CHECKPOINT_FORMAT`` and the layout are the same. Every Spark reader passes
+the declared on-disk schema (``FRONTIER_FILE_SCHEMA``, ``VISITED_SCHEMA`` /
+``FUSED_VISITED_SCHEMA``, ``LINEAGE_SCHEMA``, each plus ``round``), so
+building a read frame runs no schema-inference job, and escapes glob
+characters in its paths, so a ``chk_dir`` may contain ``[``, ``]``, ``*``…
 """
 
 from __future__ import annotations
@@ -47,6 +56,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import shutil
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Dict, Optional, Tuple
@@ -104,6 +114,16 @@ def _with_round(schema: StructType) -> StructType:
 
 _FRONTIER_READ = _with_round(FRONTIER_FILE_SCHEMA)
 
+# Driver-writer layout choices. Statistics only for the columns a reader
+# takes them from (``visited_vt_max`` reads the ``sched_ts`` max); full
+# min/max statistics on the text columns only add footer bytes. Dictionary
+# encoding only on the columns where Spark's parquet-mr writer keeps one
+# (low-cardinality ids and repeated strings); on unique strings and ranks a
+# dictionary page is pure overhead.
+STATS_COLUMNS = ("sched_ts",)
+DICT_COLUMNS = ("host", "depth", "parent_url", "link_pos", "round", "content_length",
+                "links_count", "user_agent")
+
 # Bump when the on-disk layout changes incompatibly. Format 2: enqueued/edges
 # are DERIVED from frontier snapshots carrying (parent_url, link_pos); format-1
 # checkpoints (separate state/enqueued + state/edges tables, frontier without
@@ -160,6 +180,50 @@ def _write_manifest(
     os.replace(tmp, os.path.join(base, "manifest.json"))  # atomic commit
 
 
+def _spark_path(path: str) -> str:
+    """``path`` with Hadoop glob characters escaped: ``spark.read`` globs
+    every path it is given, so a literal ``[`` in a checkpoint dir would be
+    read as a character class and the read would fail with PATH_NOT_FOUND."""
+    return re.sub(r"([\\{}\[\]*?])", r"\\\1", path)
+
+
+def _write_parquet(path: str, table) -> None:
+    """Write one pyarrow ``table`` as a snappy parquet file the way the
+    driver writer lays checkpoint files out (see ``STATS_COLUMNS``,
+    ``DICT_COLUMNS``), without the Arrow schema blob in the footer."""
+    import pyarrow.parquet as pq
+
+    names = table.schema.names
+    pq.write_table(table, path, compression="snappy", store_schema=False,
+                   use_dictionary=[c for c in names if c in DICT_COLUMNS] or False,
+                   write_statistics=[c for c in names if c in STATS_COLUMNS] or False)
+
+
+def write_round_files(chk_dir: str, rnd: int, frontier, deltas: Dict) -> None:
+    """The driver writer: round ``rnd``'s frontier snapshot (a pyarrow table
+    in ``FRONTIER_FILE_SCHEMA``; ``round`` is appended as the data column it
+    is in frontier files) and its state deltas (name → table; an empty delta
+    writes no file, and the readers treat a missing round partition as
+    empty). The round's dirs are removed first, as the Spark writer's
+    dynamic overwrite replaces them, so a round replayed after a crash never
+    mixes its files with an earlier attempt's."""
+    import pyarrow as pa
+
+    frontier = frontier.append_column(
+        "round", pa.array([rnd] * frontier.num_rows, pa.int32()))
+    name = f"part-00000-round{rnd}.snappy.parquet"
+    out = os.path.join(round_dir(chk_dir, rnd), "frontier")
+    parts = {n: os.path.join(_state_dir(chk_dir, n), f"round={rnd}") for n in deltas}
+    for d in [out, *parts.values()]:
+        shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(out)
+    _write_parquet(os.path.join(out, name), frontier)
+    for n, table in deltas.items():
+        if table.num_rows:
+            os.makedirs(parts[n])
+            _write_parquet(os.path.join(parts[n], name), table)
+
+
 def commit_round(
     chk_dir: str,
     seed_url: str,
@@ -168,24 +232,40 @@ def commit_round(
     meta_late: Optional[Callable[[], Dict]] = None,
 ) -> None:
     """The round-0 (bootstrap) commit, so a resume before the first round
-    works — written on the driver with ZERO Spark jobs. The one-row seed
-    frontier (depth 0, arrival_rank 1, no parent) goes out with pyarrow in
-    the column types Spark's writer uses and without the Arrow schema blob
-    in the footer; the empty visited / lineage deltas write no files (the
-    readers treat a missing round partition as empty)."""
+    works — written on the driver with ZERO Spark jobs: the one-row seed
+    frontier (depth 0, arrival_rank 1, no parent) through the driver writer;
+    the empty visited / lineage deltas write no files."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    row = {"url": seed_url, "host": seed_host, "depth": 0, "arrival_rank": 1,
+           "parent_url": None, "link_pos": None}
+    write_round_files(
+        chk_dir, 0, pa.Table.from_pylist([row], schema=to_arrow_schema(FRONTIER_FILE_SCHEMA)), {})
+    _write_manifest(chk_dir, 0, meta, meta_late)
+
+
+def frontier_table(chk_dir: str, upto_round: int, columns: Tuple[str, ...]):
+    """``_frontier_df`` read on the driver with pyarrow (no Spark job): the
+    frontier snapshot rows of rounds ≤ ``upto_round`` in ``columns`` plus
+    ``round``, from the compacted base where one exists."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    out = os.path.join(round_dir(chk_dir, 0), "frontier")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
-    row = {"url": seed_url, "host": seed_host, "depth": 0, "arrival_rank": 1,
-           "parent_url": None, "link_pos": None, "round": 0}
-    table = pa.Table.from_pylist([row], schema=to_arrow_schema(_FRONTIER_READ))
-    pq.write_table(table, os.path.join(out, "part-00000-round0.snappy.parquet"),
-                   compression="snappy", store_schema=False)
-    _write_manifest(chk_dir, 0, meta, meta_late)
+    cols = list(columns) + ["round"]
+    schema = to_arrow_schema(_FRONTIER_READ)
+    schema = pa.schema([schema.field(c) for c in cols])
+    c = compacted_upto(chk_dir)
+    parts, start = [], 0
+    if c is not None:
+        parts.append(pq.read_table(_base_dir(chk_dir, c), columns=cols, schema=schema,
+                                   filters=[("round", "<=", upto_round)]))
+        start = c + 1
+    for r in range(start, upto_round + 1):
+        parts.append(pq.read_table(os.path.join(round_dir(chk_dir, r), "frontier"),
+                                   columns=cols, schema=schema))
+    return pa.concat_tables(parts)
 
 
 def _parquet_dir_stats(path: str, max_cols: Tuple[str, ...] = ()) -> Tuple[int, Dict[str, object]]:
@@ -199,7 +279,8 @@ def _parquet_dir_stats(path: str, max_cols: Tuple[str, ...] = ()) -> Tuple[int, 
 
     total = 0
     maxes: Dict[str, object] = {c: None for c in max_cols}
-    for fpath in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
+    for fpath in glob.glob(os.path.join(glob.escape(path), "**", "*.parquet"),
+                           recursive=True):
         md = pq.ParquetFile(fpath).metadata
         total += md.num_rows
         if not max_cols:
@@ -256,8 +337,9 @@ def commit_round_start(
     sizes: Optional[Dict[str, int]] = None,
     heavy: Tuple[str, ...] = ("visited",),
 ) -> RoundCommit:
-    """The round commit of the hot loop (every round ≥ 1), and the only
-    Spark writer of the checkpoint. ``sizes`` (rows per table name, plus
+    """The round commit of every Spark-tier round, and the only Spark
+    writer of the checkpoint (round 0 and driver-local rounds go through
+    ``write_round_files``). ``sizes`` (rows per table name, plus
     "frontier") drives file coalescing. The frontier (the NEXT round's
     input) and the light deltas are written concurrently before returning
     (each write is one Spark job dominated by fixed cost at small round
@@ -360,7 +442,8 @@ def read_state(spark: SparkSession, chk_dir: str, name: str, upto_round: int) ->
     path = _state_dir(chk_dir, name)
     if not os.path.isdir(path):
         return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(path).filter(F.col("round") <= upto_round)
+    return (spark.read.schema(schema).parquet(_spark_path(path))
+            .filter(F.col("round") <= upto_round))
 
 
 # --- frontier-snapshot compaction -------------------------------------------
@@ -393,7 +476,7 @@ def _frontier_df(spark: SparkSession, chk_dir: str, upto_round: int) -> DataFram
     start = 0
     if c is not None:
         parts.append(
-            spark.read.schema(_FRONTIER_READ).parquet(_base_dir(chk_dir, c))
+            spark.read.schema(_FRONTIER_READ).parquet(_spark_path(_base_dir(chk_dir, c)))
             .filter(F.col("round") <= upto_round)
         )
         start = c + 1
@@ -402,7 +485,7 @@ def _frontier_df(spark: SparkSession, chk_dir: str, upto_round: int) -> DataFram
         for r in range(start, upto_round + 1)
     ]
     if live:
-        parts.append(spark.read.schema(_FRONTIER_READ).parquet(*live))
+        parts.append(spark.read.schema(_FRONTIER_READ).parquet(*map(_spark_path, live)))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -413,7 +496,7 @@ def read_frontier(spark: SparkSession, chk_dir: str, rnd: int) -> DataFrame:
     """The round-``rnd`` queue, trimmed to the loop's working columns."""
     direct = os.path.join(round_dir(chk_dir, rnd), "frontier")
     if os.path.isdir(direct):
-        df = spark.read.schema(_FRONTIER_READ).parquet(direct)
+        df = spark.read.schema(_FRONTIER_READ).parquet(_spark_path(direct))
     else:  # round folded into the compacted base
         df = _frontier_df(spark, chk_dir, rnd).filter(F.col("round") == rnd)
     return df.select("url", "host", "depth", "arrival_rank")

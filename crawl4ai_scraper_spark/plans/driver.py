@@ -1,9 +1,22 @@
 """The crawl driver: level-synchronous BFS loop + extraction pass.
 
 ≙ crawl_with_discovery (/root/reference/crawler.py:602-655): Phase 1 runs
-``run_round`` once per BFS level with checkpoint commits between rounds
-(resume = start from the last committed manifest); Phase 2 joins the
-discovered set back against pages and extracts documents in one Arrow pass.
+one round per BFS level with checkpoint commits between rounds (resume =
+start from the last committed manifest); Phase 2 joins the discovered set
+back against pages and extracts documents in one Arrow pass.
+
+A round runs in one of two tiers, picked per round from the manifest's
+``frontier_n`` / ``enqueued_n`` (no job to decide):
+
+* the driver-local tier (``plans/local.py``) when both are at most
+  ``local_round_max`` (``sizing.derive_local_round_max`` of the session's
+  cores; 0 forces the Spark tier) and the crawl is in its scope — FIFO order
+  with the default preset's features over a ``read_pages`` table. The round
+  runs with pyarrow and pandas on the driver and starts no Spark job.
+* the Spark tier (``run_round``) for every other round.
+
+Both tiers write the same checkpoint, so a crawl or a resume can cross
+between them at any round; each manifest records its round's ``tier``.
 
 Driver-side state is four integers (round, seq_base, discovered count,
 virtual clock) — everything heavy lives in checkpointed tables. No
@@ -55,7 +68,14 @@ from crawl4ai_scraper_spark.plans.checkpoint import (
     visited_vt_max,
 )
 from crawl4ai_scraper_spark.plans.frontier import run_round
+from crawl4ai_scraper_spark.plans.local import (
+    LocalState,
+    commit_round_local,
+    expand_round,
+    local_scope,
+)
 from crawl4ai_scraper_spark.plans.politeness import template_trap_stats, virtual_schedule
+from crawl4ai_scraper_spark.sizing import derive_local_round_max
 from crawl4ai_scraper_spark.sources.pages import DEFAULT_PBUCKETS, with_pbucket
 
 RUN_TS_ISO = "2025-01-01T00:00:00"  # virtual clock epoch: reproducible crawled_at
@@ -106,6 +126,7 @@ def run_crawl(
     max_rounds: Optional[int] = None,  # stop early (kill simulation / tests)
     fused_extract: bool = True,
     blocked_hosts: Optional[DataFrame] = None,  # URL screening (url_blocklist_filter)
+    local_round_max: Optional[int] = None,  # driver-local tier bound; 0 = Spark only
 ) -> CrawlResult:
     """Run the full crawl. ``fused_extract`` (default) extracts each
     pattern-matched page's document INSIDE the discovery round that visits it
@@ -113,7 +134,8 @@ def run_crawl(
     so the reference's separate Phase-2 scan of every discovered page
     (crawler.py:547-599) disappears; output is byte-identical either way.
     A resumed crawl must keep the mode of its first run (the visited-state
-    schema differs)."""
+    schema differs). ``local_round_max`` overrides the largest round the
+    driver-local tier runs (None: derived from the session's cores)."""
     seed_domain = extract_domain(seed_url)
     # The fetch join computes pbucket = pmod(xxhash64(url), N); N MUST equal
     # the modulus the pages table was written with or lookups silently miss.
@@ -157,10 +179,10 @@ def run_crawl(
     discovered_n = meta["discovered"]
     round_vt = meta["round_vt"]
     done = meta.get("done", False)
-    frontier = read_frontier(spark, chk_dir, last)
-    enqueued = read_enqueued(spark, chk_dir, last)
-    frontier_n = meta["frontier_n"] if "frontier_n" in meta else frontier.count()
-    enqueued_n = meta["enqueued_n"] if "enqueued_n" in meta else enqueued.count()
+    frontier_n = (meta["frontier_n"] if "frontier_n" in meta
+                  else read_frontier(spark, chk_dir, last).count())
+    enqueued_n = (meta["enqueued_n"] if "enqueued_n" in meta
+                  else read_enqueued(spark, chk_dir, last).count())
     resume_traps = meta.get("trap_templates", [])
 
     extraction = None
@@ -190,6 +212,16 @@ def run_crawl(
     # N+1's scan; finalized (manifest written, round_vt learned, caches
     # freed) right after that scan returns, before anything needs it.
     pending: list = []  # 0 or 1 dicts
+    # Driver-local tier: the pages root if the crawl is in its scope, the
+    # per-round size bound, and the in-memory state of a run of local rounds
+    # (loaded when the crawl enters the tier, dropped when it leaves).
+    pages_root = local_scope(
+        pages, cfg, host_rules=host_rules, blocked_hosts=blocked_hosts,
+        blocked_templates=blocked_templates, priority_col=priority_col, use_bloom=use_bloom,
+    )
+    if local_round_max is None:
+        local_round_max = derive_local_round_max(spark.sparkContext.defaultParallelism)
+    local: Optional[LocalState] = None
 
     def _finalize_pending() -> None:
         nonlocal round_vt
@@ -230,6 +262,35 @@ def run_crawl(
         # anti-join it would shave ("auto"). Correctness never depends on it.
         timer = _Timer(f"round {rnd}")
         build_it = use_bloom is True or (use_bloom == "auto" and enqueued_n > 5_000_000)
+        if (pages_root is not None and not build_it
+                and frontier_n <= local_round_max and enqueued_n <= local_round_max):
+            if local is None:
+                local = LocalState.load(chk_dir, last)
+            lr = expand_round(local, pages_root, cfg, seed_domain, seq_base, discovered_n,
+                              n_buckets, extraction)
+            # a Spark round before this one: its manifest lands first, and
+            # the schedule needs its round_vt
+            _finalize_pending()
+            round_vt_out = lr.schedule(round_vt, cfg.delay_between_requests)
+            seq_base += lr.counts["visited"]
+            discovered_n += lr.counts["matched_new"]
+            frontier_n = lr.counts["frontier_out"]
+            done = lr.truncated or frontier_n == 0
+            enqueued_n += frontier_n
+            commit_round_local(chk_dir, rnd, lr, fused, {
+                "seq_base": seq_base, "discovered": discovered_n, "fused": fused,
+                "trap_templates": sorted(trap_templates), "tier": "local",
+                "counts": lr.counts, "frontier_n": frontier_n, "enqueued_n": enqueued_n,
+                "round_vt": round_vt_out, "done": done,
+            })
+            local.advance(lr.new_frontier)
+            round_vt = round_vt_out
+            last = rnd
+            rnd += 1
+            continue
+        local = None
+        frontier = read_frontier(spark, chk_dir, last)
+        enqueued = read_enqueued(spark, chk_dir, last)
         bloom = None
         if build_it:
             if cfg.seen_filter == "cuckoo":
@@ -337,7 +398,7 @@ def run_crawl(
                     "lineage": rr.lineage,
                 },
                 {"seq_base": seq_base, "discovered": discovered_n, "fused": fused,
-                 "trap_templates": sorted(trap_templates)},
+                 "trap_templates": sorted(trap_templates), "tier": "spark"},
                 # fused visited rows are weighted 16x so the snapshot
                 # writer's rows//250k file heuristic lands near one write
                 # task per core for the heavy text-encode rounds; frontier
@@ -365,8 +426,6 @@ def run_crawl(
         timer.lap("commit start (frontier+lineage written; visited deferred)")
         last = rnd
         rnd += 1
-        frontier = read_frontier(spark, chk_dir, last)
-        enqueued = read_enqueued(spark, chk_dir, last)
 
     # join the last round's deferred write + manifest before reading state
     # (_finalize_pending cleans up after itself on failure; the round simply

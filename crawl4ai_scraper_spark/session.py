@@ -49,10 +49,14 @@ def build_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # Straggler insurance: a wedged task (observed once: a Python worker
-        # blocked on a full socket while its executor thread polled) gets a
-        # speculative copy instead of stalling the whole round. Our tasks are
+        # Cluster-only straggler insurance: on a multi-executor cluster a
+        # task stuck on a slow or failing node gets a speculative copy on
+        # another executor instead of stalling the whole round. Our tasks are
         # deterministic and the commit protocol makes re-execution safe.
+        # These settings do nothing in local mode: Spark never speculates
+        # there (in local[4], a 6 s task among 0.2 s siblings started no
+        # speculative copy, per the event log), so they cannot rescue a
+        # wedged local Python worker.
         .config("spark.speculation", "true")
         .config("spark.speculation.multiplier", "4")
         .config("spark.speculation.quantile", "0.9")

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import struct
 from typing import Iterator, List, Optional
 
 import pandas as pd
@@ -33,6 +34,55 @@ DEFAULT_PBUCKETS = 32
 
 def with_pbucket(df: DataFrame, n_buckets: int = DEFAULT_PBUCKETS) -> DataFrame:
     return df.withColumn("pbucket", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int"))
+
+
+_M = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+                           0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M
+
+
+def _round(acc: int, lane: int) -> int:
+    return (_rotl((acc + lane * _P2) & _M, 31) * _P1) & _M
+
+
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as an unsigned 64-bit integer; with Spark's seed 42
+    this is Spark SQL's ``xxhash64`` of a string, modulo 2^64."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M, (seed + _P2) & _M, seed, (seed - _P1) & _M]
+        while i + 32 <= n:
+            v = [_round(a, lane) for a, lane in zip(v, struct.unpack_from("<4Q", data, i))]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M
+        for a in v:
+            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M
+    else:
+        h = (seed + _P5) & _M
+    h = (h + n) & _M
+    while i + 8 <= n:
+        h = (_rotl(h ^ _round(0, struct.unpack_from("<Q", data, i)[0]), 27) * _P1 + _P4) & _M
+        i += 8
+    if i + 4 <= n:
+        h = (_rotl(h ^ (struct.unpack_from("<I", data, i)[0] * _P1 & _M), 23) * _P2 + _P3) & _M
+        i += 4
+    for byte in data[i:]:
+        h = (_rotl(h ^ (byte * _P5 & _M), 11) * _P1) & _M
+    h = ((h ^ (h >> 33)) * _P2) & _M
+    h = ((h ^ (h >> 29)) * _P3) & _M
+    return h ^ (h >> 32)
+
+
+def pbucket_of(url: str, n_buckets: int) -> int:
+    """``with_pbucket`` on the driver: Spark's ``pmod(xxhash64(url), n)``,
+    taken on the SIGNED hash so any bucket count matches (the unsigned hash
+    agrees with it only when ``n`` is a power of two)."""
+    h = xxhash64(url.encode("utf-8"))
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
 def synthesize_pages(
@@ -85,7 +135,20 @@ def synthesize_pages(
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """The pages table at ``path``. A table on the local filesystem records
+    its root on the returned frame (``pages_table_root``), so the driver-local
+    round tier may read its ``pbucket=`` dirs directly. A frame derived from
+    this one (filter, select, …) is a new object without the record."""
+    df = spark.read.parquet(path)
+    if os.path.isdir(path):
+        df.__dict__["_pages_root"] = os.path.abspath(path)
+    return df
+
+
+def pages_table_root(pages: DataFrame) -> Optional[str]:
+    """The root dir of ``pages`` if it is exactly a frame ``read_pages``
+    returned for a local table, else None."""
+    return pages.__dict__.get("_pages_root")
 
 
 def pages_n_buckets(path: str, default: int = DEFAULT_PBUCKETS) -> int:

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Operational report over a crawl checkpoint: rounds, per-round lineage
+"""Operational report over a crawl checkpoint: rounds (each with the tier it
+ran in — ``local`` or ``spark`` — and its counts), per-round lineage
 (frontier-in / fetched / frontier-out per partition), per-host visit counts,
 and output summary — everything from committed snapshots, nothing recomputed.
 
@@ -40,6 +41,13 @@ def main(argv=None):
 
     report = {"checkpoint": args.checkpoint, "last_round": last,
               "last_manifest": load_manifest(args.checkpoint, last)}
+    # round 0 is the bootstrap commit; a manifest without a tier predates
+    # the driver-local tier and ran in Spark
+    report["rounds"] = [
+        {"round": rnd, "tier": m.get("tier", "spark"), "counts": m.get("counts")}
+        for rnd in range(1, last + 1)
+        for m in [load_manifest(args.checkpoint, rnd)]
+    ]
 
     lineage = read_state(spark, args.checkpoint, "lineage", last)
     report["lineage_by_round"] = [
