@@ -9,8 +9,7 @@ A round runs in one of two tiers, picked per round from the manifest's
 ``frontier_n`` / ``enqueued_n`` (no job to decide):
 
 * the driver-local tier (``plans/local.py``) when both are at most
-  ``local_round_max`` (``sizing.derive_local_round_max`` of the session's
-  cores; 0 forces the Spark tier) and the crawl is in its scope — FIFO order
+  ``sizing.LOCAL_ROUND_MAX`` and the crawl is in its scope — FIFO order
   with the default preset's features over a ``read_pages`` table. The round
   runs with pyarrow and pandas on the driver and starts no Spark job.
 * the Spark tier (``run_round``) for every other round.
@@ -75,7 +74,7 @@ from crawl4ai_scraper_spark.plans.local import (
     local_scope,
 )
 from crawl4ai_scraper_spark.plans.politeness import template_trap_stats, virtual_schedule
-from crawl4ai_scraper_spark.sizing import derive_local_round_max
+from crawl4ai_scraper_spark.sizing import LOCAL_ROUND_MAX
 from crawl4ai_scraper_spark.sources.pages import DEFAULT_PBUCKETS, with_pbucket
 
 RUN_TS_ISO = "2025-01-01T00:00:00"  # virtual clock epoch: reproducible crawled_at
@@ -126,7 +125,6 @@ def run_crawl(
     max_rounds: Optional[int] = None,  # stop early (kill simulation / tests)
     fused_extract: bool = True,
     blocked_hosts: Optional[DataFrame] = None,  # URL screening (url_blocklist_filter)
-    local_round_max: Optional[int] = None,  # driver-local tier bound; 0 = Spark only
 ) -> CrawlResult:
     """Run the full crawl. ``fused_extract`` (default) extracts each
     pattern-matched page's document INSIDE the discovery round that visits it
@@ -134,8 +132,7 @@ def run_crawl(
     so the reference's separate Phase-2 scan of every discovered page
     (crawler.py:547-599) disappears; output is byte-identical either way.
     A resumed crawl must keep the mode of its first run (the visited-state
-    schema differs). ``local_round_max`` overrides the largest round the
-    driver-local tier runs (None: derived from the session's cores)."""
+    schema differs)."""
     seed_domain = extract_domain(seed_url)
     # The fetch join computes pbucket = pmod(xxhash64(url), N); N MUST equal
     # the modulus the pages table was written with or lookups silently miss.
@@ -212,15 +209,13 @@ def run_crawl(
     # N+1's scan; finalized (manifest written, round_vt learned, caches
     # freed) right after that scan returns, before anything needs it.
     pending: list = []  # 0 or 1 dicts
-    # Driver-local tier: the pages root if the crawl is in its scope, the
-    # per-round size bound, and the in-memory state of a run of local rounds
-    # (loaded when the crawl enters the tier, dropped when it leaves).
+    # Driver-local tier: the pages root if the crawl is in its scope, and the
+    # in-memory state of a run of local rounds (loaded when the crawl enters
+    # the tier, dropped when it leaves).
     pages_root = local_scope(
         pages, cfg, host_rules=host_rules, blocked_hosts=blocked_hosts,
         blocked_templates=blocked_templates, priority_col=priority_col, use_bloom=use_bloom,
     )
-    if local_round_max is None:
-        local_round_max = derive_local_round_max(spark.sparkContext.defaultParallelism)
     local: Optional[LocalState] = None
 
     def _finalize_pending() -> None:
@@ -263,7 +258,7 @@ def run_crawl(
         timer = _Timer(f"round {rnd}")
         build_it = use_bloom is True or (use_bloom == "auto" and enqueued_n > 5_000_000)
         if (pages_root is not None and not build_it
-                and frontier_n <= local_round_max and enqueued_n <= local_round_max):
+                and frontier_n <= LOCAL_ROUND_MAX and enqueued_n <= LOCAL_ROUND_MAX):
             if local is None:
                 local = LocalState.load(chk_dir, last)
             lr = expand_round(local, pages_root, cfg, seed_domain, seq_base, discovered_n,

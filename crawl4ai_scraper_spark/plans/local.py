@@ -2,9 +2,9 @@
 
 On small rounds nearly all of a Spark round's wall time is job overhead
 (planning, scheduling, tiny shuffles, small commits), not page work. A round
-whose frontier and enqueued set both hold at most ``local_round_max`` rows
-(``sizing.derive_local_round_max``) runs here instead, with pyarrow and pandas
-in the driver process, and writes the same checkpoint as a Spark round:
+whose frontier and enqueued set both hold at most ``sizing.LOCAL_ROUND_MAX``
+rows runs here instead, with pyarrow and pandas in the driver process, and
+writes the same checkpoint as a Spark round:
 
     fetch     frontier ⋈ pages, read straight from the table's ``pbucket=``
               dirs (pyarrow, url ``in`` filter), plus misses with html=null —

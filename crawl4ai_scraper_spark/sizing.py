@@ -56,23 +56,17 @@ DRIVER_GB_PER_INPUT_GB = 4.0
 DRIVER_MIN_GB = 12
 
 
-# Driver-local round tier (plans/local.py) crossover. A local round costs
-# about LOCAL_ROW_S per frontier row on one driver core; a Spark round costs
-# a fixed SPARK_ROUND_FIXED_S plus the same per-row work spread over the
-# cores at SPARK_ROW_OVERHEAD times its local cost (Arrow transfer, Python
-# workers, shuffles). Measured on a 4-vCPU host with fused extraction, both
-# tiers forced, warm JVM: rounds of 1-1,279 rows took 2.3-3.4 s in Spark
-# whatever their size; a 4,801-row expanding round took 4.5-4.7 s locally
-# (0.95 ms/row) and 4.1-4.2 s in Spark (0.29 ms/row on 4 cores, 1.2x the
-# local cost per core). Leaf rounds (no expansion) cost about half per row,
-# so the expanding cost is the conservative one. Both costs are CPU-bound
-# and scale together with host speed; their ratio is what sets the bound.
-SPARK_ROUND_FIXED_S = 2.8
-LOCAL_ROW_S = 0.00095
-SPARK_ROW_OVERHEAD = 1.2
-# Driver memory cap (fetched html, extracted text and the enqueued set of a
-# local round), binding only where the Spark tier never catches up.
-MAX_LOCAL_ROUND_ROWS = 50_000
+# Driver-local round tier (plans/local.py): the largest round (frontier rows,
+# and enqueued rows) that runs on the driver. Measured on a 4-vCPU host with
+# fused extraction, both tiers forced, warm JVM (scripts/tier_crossover.py):
+# rounds of 1-1,279 rows took 2.0-4.6 s in Spark whatever their size and at
+# most 1.1 s locally; rounds of 2,401 / 3,199 / 4,801 / 6,399 / 9,601 /
+# 12,799 rows took 2.1-2.6 / 2.0-2.2 / 4.1-5.0 / 3.7-4.3 / 8.0-10.4 /
+# 8.1-8.4 s locally and 3.5-4.2 / 3.2-4.3 / 4.0-6.1 / 4.0-5.1 / 5.7-6.1 /
+# 5.1-6.0 s in Spark. Only one core count has been measured, so the bound is
+# one constant, not a function of the cores; it keeps 10^5-row rounds on
+# Spark on any host.
+LOCAL_ROUND_MAX = 4_000
 
 
 @dataclass
@@ -196,17 +190,3 @@ def autosize_path(path: str | Path, n_cores: int,
         assert_driver_headroom(derive_driver_memory_gb(decision.stats))
     return decision
 
-
-def derive_local_round_max(n_cores: int) -> int:
-    """Largest round (frontier rows, and enqueued rows) that runs in the
-    driver-local tier on ``n_cores``: the row count where a Spark round's
-    fixed cost is paid back by spreading its per-row work over the cores,
-
-        LOCAL_ROW_S · n  =  SPARK_ROUND_FIXED_S + SPARK_ROW_OVERHEAD · LOCAL_ROW_S · n / n_cores,
-
-    capped at MAX_LOCAL_ROUND_ROWS. With no more cores than SPARK_ROW_OVERHEAD
-    the Spark tier never catches up and the cap decides."""
-    gain = 1.0 - SPARK_ROW_OVERHEAD / max(1, n_cores)
-    if gain <= 0:
-        return MAX_LOCAL_ROUND_ROWS
-    return min(MAX_LOCAL_ROUND_ROWS, int(SPARK_ROUND_FIXED_S / (LOCAL_ROW_S * gain)))

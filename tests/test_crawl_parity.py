@@ -12,20 +12,16 @@ from crawl4ai_scraper_spark.config import CrawlJobConfig
 from crawl4ai_scraper_spark.oracle import oracle_crawl, oracle_discover
 from crawl4ai_scraper_spark.oracle.simulator import oracle_multi_seed
 from crawl4ai_scraper_spark.plans import driver
-
-# These gates hold the Spark tier: every crawl here runs with the
-# driver-local tier off (local_round_max=0). tests/test_local_tier.py runs
-# the local and the automatic tier against the same oracle.
+from crawl4ai_scraper_spark.plans.driver import run_crawl, run_multi_seed
 
 
-def run_crawl(*args, **kwargs):
-    kwargs.setdefault("local_round_max", 0)
-    return driver.run_crawl(*args, **kwargs)
+@pytest.fixture(autouse=True)
+def spark_tier_only(monkeypatch):
+    """These gates hold the Spark tier: every crawl here runs with the
+    driver-local tier off. tests/test_local_tier.py runs the local and the
+    automatic tier against the same oracle."""
+    monkeypatch.setattr(driver, "LOCAL_ROUND_MAX", 0)
 
-
-def run_multi_seed(*args, **kwargs):
-    kwargs.setdefault("local_round_max", 0)
-    return driver.run_multi_seed(*args, **kwargs)
 
 SEED = "https://site0.example/"
 

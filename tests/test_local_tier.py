@@ -5,17 +5,25 @@ crossover bound and the checkpoint bytes."""
 
 import os
 import shutil
+from unittest import mock
 
 import pytest
 
 from crawl4ai_scraper_spark.config import CrawlJobConfig
 from crawl4ai_scraper_spark.oracle import oracle_crawl, oracle_discover
+from crawl4ai_scraper_spark.plans import driver
 from crawl4ai_scraper_spark.plans.checkpoint import latest_round, load_manifest, round_dir
-from crawl4ai_scraper_spark.plans.driver import run_crawl
+from crawl4ai_scraper_spark.sizing import LOCAL_ROUND_MAX
 
 SEED = "https://site0.example/"
-LOCAL, SPARK = 10 ** 9, 0  # local_round_max that forces each tier
-TIERS = {"local": LOCAL, "spark": SPARK, "auto": None, "mixed": 10}
+# driver.LOCAL_ROUND_MAX that forces each tier; "mixed" runs the 1- and
+# 9-row rounds locally and the larger last round in Spark
+TIERS = {"local": 10 ** 9, "spark": 0, "auto": LOCAL_ROUND_MAX, "mixed": 10}
+
+
+def run_crawl(*args, tier="auto", **kwargs):
+    with mock.patch.object(driver, "LOCAL_ROUND_MAX", TIERS[tier]):
+        return driver.run_crawl(*args, **kwargs)
 
 
 def tiers(chk_dir):
@@ -50,8 +58,7 @@ def test_tier_parity_matrix(spark, pages3, web3, chk_dir, tier, extract):
     cfg = CrawlJobConfig(max_depth=3, max_pages=40)
     oracle = oracle_for(fetch, SEED, cfg, extract)
     assert len(oracle.visited) > 40 and any(fetch(u) is None for u in oracle.visited)
-    res = run_crawl(spark, pages3, SEED, cfg, chk_dir, extract=extract,
-                    local_round_max=TIERS[tier])
+    res = run_crawl(spark, pages3, SEED, cfg, chk_dir, extract=extract, tier=tier)
     assert_oracle_equal(res, oracle, extract)
     ran = tiers(chk_dir)
     expected = {"local": ["local"] * 3, "spark": ["spark"] * 3, "auto": ["local"] * 3,
@@ -60,8 +67,7 @@ def test_tier_parity_matrix(spark, pages3, web3, chk_dir, tier, extract):
     assert load_manifest(chk_dir, 3)["done"] is True
 
     missing = "https://nosuch.example/"
-    res = run_crawl(spark, pages3, missing, cfg, chk_dir + "_m", extract=extract,
-                    local_round_max=TIERS[tier])
+    res = run_crawl(spark, pages3, missing, cfg, chk_dir + "_m", extract=extract, tier=tier)
     assert_oracle_equal(res, oracle_for(fetch, missing, cfg, extract), extract)
     assert res.summary["rounds"] == 1
 
@@ -79,8 +85,8 @@ def test_tiers_commit_equal_rounds(spark, pages3, chk_dir):
 
     cfg = CrawlJobConfig(max_depth=3, max_pages=40)
     chk_l, chk_s = chk_dir + "_l", chk_dir + "_s"
-    run_crawl(spark, pages3, SEED, cfg, chk_l, local_round_max=LOCAL)
-    run_crawl(spark, pages3, SEED, cfg, chk_s, local_round_max=SPARK)
+    run_crawl(spark, pages3, SEED, cfg, chk_l, tier="local")
+    run_crawl(spark, pages3, SEED, cfg, chk_s, tier="spark")
     assert _counts(chk_l) == _counts(chk_s)
     last = latest_round(chk_s)
     for key in ("seq_base", "discovered", "frontier_n", "enqueued_n", "round_vt", "done"):
@@ -101,9 +107,8 @@ def test_tiers_commit_equal_rounds(spark, pages3, chk_dir):
 def test_resume_crosses_tiers(spark, pages3, web3, chk_dir, first, then):
     _, _, fetch = web3
     cfg = CrawlJobConfig(max_depth=3, max_pages=40)
-    run_crawl(spark, pages3, SEED, cfg, chk_dir, max_rounds=2, local_round_max=TIERS[first])
-    res = run_crawl(spark, pages3, SEED, cfg, chk_dir, resume=True,
-                    local_round_max=TIERS[then])
+    run_crawl(spark, pages3, SEED, cfg, chk_dir, max_rounds=2, tier=first)
+    res = run_crawl(spark, pages3, SEED, cfg, chk_dir, resume=True, tier=then)
     assert_oracle_equal(res, oracle_crawl(fetch, SEED, cfg), True)
     assert tiers(chk_dir) == [first, first, then]
 
@@ -115,10 +120,10 @@ def test_local_resume_after_compaction(spark, pages3, web3, chk_dir):
 
     _, _, fetch = web3
     cfg = CrawlJobConfig(max_depth=3, max_pages=40)
-    run_crawl(spark, pages3, SEED, cfg, chk_dir, max_rounds=2, local_round_max=LOCAL)
+    run_crawl(spark, pages3, SEED, cfg, chk_dir, max_rounds=2, tier="local")
     assert compact_checkpoint(spark, chk_dir) == 2
     assert not os.path.isdir(os.path.join(round_dir(chk_dir, 2), "frontier"))
-    res = run_crawl(spark, pages3, SEED, cfg, chk_dir, resume=True, local_round_max=LOCAL)
+    res = run_crawl(spark, pages3, SEED, cfg, chk_dir, resume=True, tier="local")
     assert_oracle_equal(res, oracle_crawl(fetch, SEED, cfg), True)
     assert tiers(chk_dir) == ["local"] * 3
 
@@ -129,13 +134,13 @@ def test_local_round_replayed_after_lost_manifest(spark, pages3, web3, chk_dir):
     the lost attempt."""
     _, _, fetch = web3
     cfg = CrawlJobConfig(max_depth=3, max_pages=40)
-    run_crawl(spark, pages3, SEED, cfg, chk_dir, max_rounds=2, local_round_max=LOCAL)
+    run_crawl(spark, pages3, SEED, cfg, chk_dir, max_rounds=2, tier="local")
     os.remove(os.path.join(round_dir(chk_dir, 2), "manifest.json"))
     # a stray file from the lost attempt would add rows if it survived
     visited2 = os.path.join(chk_dir, "state", "visited", "round=2")
     part = next(f for f in os.listdir(visited2) if f.endswith(".parquet"))
     shutil.copy(os.path.join(visited2, part), os.path.join(visited2, "part-stray.parquet"))
-    res = run_crawl(spark, pages3, SEED, cfg, chk_dir, resume=True, local_round_max=LOCAL)
+    res = run_crawl(spark, pages3, SEED, cfg, chk_dir, resume=True, tier="local")
     assert_oracle_equal(res, oracle_crawl(fetch, SEED, cfg), True)
     assert os.listdir(visited2) == [part]
 
@@ -149,8 +154,7 @@ def test_local_rounds_start_no_spark_job(spark, pages3, web3, chk_dir):
     group = "local-tier"
     sc.setJobGroup(group, group)
     try:
-        res = run_crawl(spark, pages3, SEED, cfg, chk_dir, extract=False,
-                        local_round_max=LOCAL)
+        res = run_crawl(spark, pages3, SEED, cfg, chk_dir, extract=False, tier="local")
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
@@ -190,7 +194,7 @@ def test_derived_pages_frame_crawls_in_spark_tier(spark, pages3, web3, chk_dir):
     _, _, fetch = web3
     cfg = CrawlJobConfig(max_depth=1, max_pages=30)
     res = run_crawl(spark, pages3.filter(F.col("url").isNotNull()), SEED, cfg, chk_dir,
-                    local_round_max=LOCAL)
+                    tier="local")
     assert tiers(chk_dir) == ["spark", "spark"]
     assert_oracle_equal(res, oracle_crawl(fetch, SEED, cfg), True)
 
@@ -210,12 +214,10 @@ def test_pbucket_matches_spark_xxhash64(spark, n):
 
 
 def test_local_round_max_keeps_large_rounds_on_spark():
-    from crawl4ai_scraper_spark.sizing import MAX_LOCAL_ROUND_ROWS, derive_local_round_max
-
-    assert derive_local_round_max(32) < 100_000
-    assert derive_local_round_max(4) >= 3_000  # every round of the kept workloads
-    sizes = [derive_local_round_max(c) for c in (1, 2, 4, 8, 16, 32, 64, 1024)]
-    assert sizes == sorted(sizes, reverse=True) and sizes[0] == MAX_LOCAL_ROUND_ROWS
+    """One measured bound for every core count: 10^5-row rounds run in Spark
+    (32 cores included), and every round of the benchmark's crawls (at most
+    1,279 frontier and 2,261 enqueued rows) runs locally."""
+    assert 2_261 <= LOCAL_ROUND_MAX < 100_000
 
 
 def _bytes(path):
@@ -225,8 +227,8 @@ def _bytes(path):
 @pytest.mark.parametrize("extract", [True, False], ids=["fused", "discovery"])
 def test_local_checkpoint_no_larger_than_spark(spark, pages3, chk_dir, extract):
     cfg = CrawlJobConfig(max_depth=3, max_pages=40)
-    run_crawl(spark, pages3, SEED, cfg, chk_dir + "_l", extract=extract, local_round_max=LOCAL)
-    run_crawl(spark, pages3, SEED, cfg, chk_dir + "_s", extract=extract, local_round_max=SPARK)
+    run_crawl(spark, pages3, SEED, cfg, chk_dir + "_l", extract=extract, tier="local")
+    run_crawl(spark, pages3, SEED, cfg, chk_dir + "_s", extract=extract, tier="spark")
     assert _bytes(chk_dir + "_l") <= _bytes(chk_dir + "_s")
 
 
@@ -236,7 +238,7 @@ def test_glob_characters_in_chk_dir(spark, pages3, web3, chk_dir):
     _, _, fetch = web3
     cfg = CrawlJobConfig(max_depth=3, max_pages=40)
     chk = os.path.join(chk_dir, "x[fused]")
-    part = run_crawl(spark, pages3, SEED, cfg, chk, max_rounds=2, local_round_max=SPARK)
+    part = run_crawl(spark, pages3, SEED, cfg, chk, max_rounds=2, tier="spark")
     assert part.rounds == 2 and part.visited.count() == 9
     res = run_crawl(spark, pages3, SEED, cfg, chk, resume=True)
     assert_oracle_equal(res, oracle_crawl(fetch, SEED, cfg), True)
@@ -252,7 +254,7 @@ def test_crawl_report_prints_round_tiers(spark, pages3, chk_dir, capsys):
     import crawl_report
 
     cfg = CrawlJobConfig(max_depth=3, max_pages=40)
-    run_crawl(spark, pages3, SEED, cfg, chk_dir, extract=False, local_round_max=10)
+    run_crawl(spark, pages3, SEED, cfg, chk_dir, extract=False, tier="mixed")
     # a manifest written before rounds recorded their tier reads as spark
     m3 = os.path.join(round_dir(chk_dir, 3), "manifest.json")
     manifest = json.load(open(m3))
