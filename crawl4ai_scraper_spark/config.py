@@ -85,24 +85,6 @@ class CrawlJobConfig:
     # back to the shuffled left join. 4M rows ≈ 300 MB broadcast — the safe
     # ceiling for 4-8 GiB executors.
     broadcast_frontier_threshold: int = 4_000_000
-    # Deferred-stats ceiling (rows): rounds whose frontier is at most this
-    # size carry their ok/matched/links scalars as observe() metrics on the
-    # rank chain's first action — zero dedicated stats job (VERDICT r4 #4's
-    # suggestion, implemented and MEASURED in round 5). Default 0 = OFF:
-    # three measured pathologies outweigh the ~1-2% win of removing one
-    # small per-round job. (1) 16×-corpus: fusing cache materialization
-    # into the rank chain holds Arrow-expansion output AND shuffle-write
-    # state per task; at 5-7M-row rounds the storage pool loses that
-    # contention → eviction/spill, 915 s vs 644 s eager (BENCH.md r5).
-    # (2) One @local[8] run wedged: the rank-chain collect materializing
-    # nested TableCacheQueryStages concurrently with the deferred visited
-    # write parked forever inside AQE withFinalPlanUpdate
-    # (logs/deadlock_jstack_8cpu context in round-5 notes). (3) One @local[8]
-    # run lost a Python worker mid-cache-build ("Python worker exited
-    # unexpectedly", logs/scaling_fail_cpus8_*.log). The eager one-job agg
-    # has the long stability record; set this >0 (rows ceiling) to opt in,
-    # or SPARK_GRAFT_EAGER_STATS=1 to force eager regardless.
-    defer_stats_max_frontier: int = 0
     # Priority mode: "fifo" replicates the reference's BFS queue exactly;
     # "priority" orders each round by (priority desc, arrival) — our extension.
     frontier_order: str = "fifo"

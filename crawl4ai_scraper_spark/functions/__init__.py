@@ -1,21 +1,15 @@
 from crawl4ai_scraper_spark.functions.udfs import (
-    EXPANDED_LINKS_SCHEMA,
     EXTRACTED_SCHEMA,
     canon_url_udf,
-    expand_links,
     extract_documents,
     include_exclude_predicate,
-    make_filename_udf,
     make_path_udf,
 )
 
 __all__ = [
-    "EXPANDED_LINKS_SCHEMA",
     "EXTRACTED_SCHEMA",
     "canon_url_udf",
-    "expand_links",
     "extract_documents",
     "include_exclude_predicate",
-    "make_filename_udf",
     "make_path_udf",
 ]

@@ -19,13 +19,13 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import BooleanType, StringType
+from pyspark.sql.types import StringType
 
 from crawl4ai_scraper_spark.kernel.cleaning import CleaningConfig
-from crawl4ai_scraper_spark.kernel.extraction import extract_record, pick_user_agent
-from crawl4ai_scraper_spark.kernel.htmlkit import decode_html, extract_links, scan_links
-from crawl4ai_scraper_spark.kernel.naming import generate_filename, output_rel_path
-from crawl4ai_scraper_spark.kernel.urls import canon_url, extract_domain, wildcard_to_regex
+from crawl4ai_scraper_spark.kernel.extraction import extract_record
+from crawl4ai_scraper_spark.kernel.htmlkit import decode_html, scan_links
+from crawl4ai_scraper_spark.kernel.naming import output_rel_path
+from crawl4ai_scraper_spark.kernel.urls import canon_url, wildcard_to_regex
 
 # ---------------------------------------------------------------------------
 # Scalar pandas UDFs
@@ -35,33 +35,6 @@ from crawl4ai_scraper_spark.kernel.urls import canon_url, extract_domain, wildca
 def canon_url_udf(urls: pd.Series, bases: pd.Series) -> pd.Series:
     """URL canonicalization (kernel.urls.canon_url ≙ crawler.py:150-165)."""
     return pd.Series([canon_url(u, b) for u, b in zip(urls, bases)])
-
-
-@pandas_udf(StringType())
-def domain_udf(urls: pd.Series) -> pd.Series:
-    """scheme://netloc (kernel.urls.extract_domain ≙ crawler.py:141-144)."""
-    return pd.Series([extract_domain(u) for u in urls])
-
-
-@pandas_udf(StringType())
-def ua_pick_udf(urls: pd.Series) -> pd.Series:
-    """Deterministic user-agent pick (metadata-only; see kernel.extraction)."""
-    return pd.Series([pick_user_agent(u) for u in urls])
-
-
-def make_filename_udf(convention: str, run_ts_iso: str):
-    """Filename per naming convention (output_manager.py:294-342)."""
-    from datetime import datetime
-
-    run_ts = datetime.fromisoformat(run_ts_iso)
-
-    @pandas_udf(StringType())
-    def _fn(urls: pd.Series, titles: pd.Series) -> pd.Series:
-        return pd.Series(
-            [generate_filename(u, t or "Untitled", convention, run_ts) for u, t in zip(urls, titles)]
-        )
-
-    return _fn
 
 
 def make_path_udf(strategy: str, convention: str, run_ts_iso: str, pattern: str = "{domain}/{filename}"):
@@ -109,48 +82,6 @@ def include_exclude_predicate(
 # ---------------------------------------------------------------------------
 # Batch transformers (mapInPandas)
 # ---------------------------------------------------------------------------
-
-EXPANDED_LINKS_SCHEMA = (
-    "parent_url string, parent_seq long, parent_depth int, link_pos int, "
-    "child_url string, child_domain string, child_host string"
-)
-
-
-def expand_links(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fetched page batches → one row per INTERNAL link, already canonicalized
-    (urljoin vs the parent) with the child's domain/host attached. Replaces
-    the reference's per-link loop (crawler.py:210-230) with one Arrow pass:
-    render + canon + domain in a single Python batch, no explode needed.
-
-    Input columns: url, seq, depth, html. Link order (link_pos) is document
-    order, which is what makes first-appender dedup reproducible.
-    """
-    from urllib.parse import urlparse
-
-    for pdf in it:
-        out = {k: [] for k in
-               ("parent_url", "parent_seq", "parent_depth", "link_pos",
-                "child_url", "child_domain", "child_host")}
-        for url, seq, depth, html in zip(pdf["url"], pdf["seq"], pdf["depth"], pdf["html"]):
-            if html is None:
-                continue
-            for link in extract_links(decode_html(html), url):
-                if not link["is_internal"]:
-                    continue  # the reference iterates links['internal'] only
-                href = link["href"]
-                if not href:
-                    continue
-                child = canon_url(href, url)
-                parsed = urlparse(child)
-                out["parent_url"].append(url)
-                out["parent_seq"].append(int(seq))
-                out["parent_depth"].append(int(depth))
-                out["link_pos"].append(int(link["link_pos"]))
-                out["child_url"].append(child)
-                out["child_domain"].append(f"{parsed.scheme}://{parsed.netloc}")
-                out["child_host"].append(parsed.netloc)
-        yield pd.DataFrame(out)
-
 
 VISIT_EXPAND_SCHEMA = (
     "kind tinyint, url string, host string, depth int, arrival_rank long, "

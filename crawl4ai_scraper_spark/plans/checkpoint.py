@@ -180,7 +180,7 @@ def _write_manifest(
     os.replace(tmp, os.path.join(base, "manifest.json"))  # atomic commit
 
 
-def _spark_path(path: str) -> str:
+def spark_path(path: str) -> str:
     """``path`` with Hadoop glob characters escaped: ``spark.read`` globs
     every path it is given, so a literal ``[`` in a checkpoint dir would be
     read as a character class and the read would fail with PATH_NOT_FOUND."""
@@ -442,7 +442,7 @@ def read_state(spark: SparkSession, chk_dir: str, name: str, upto_round: int) ->
     path = _state_dir(chk_dir, name)
     if not os.path.isdir(path):
         return spark.createDataFrame([], schema)
-    return (spark.read.schema(schema).parquet(_spark_path(path))
+    return (spark.read.schema(schema).parquet(spark_path(path))
             .filter(F.col("round") <= upto_round))
 
 
@@ -476,7 +476,7 @@ def _frontier_df(spark: SparkSession, chk_dir: str, upto_round: int) -> DataFram
     start = 0
     if c is not None:
         parts.append(
-            spark.read.schema(_FRONTIER_READ).parquet(_spark_path(_base_dir(chk_dir, c)))
+            spark.read.schema(_FRONTIER_READ).parquet(spark_path(_base_dir(chk_dir, c)))
             .filter(F.col("round") <= upto_round)
         )
         start = c + 1
@@ -485,7 +485,7 @@ def _frontier_df(spark: SparkSession, chk_dir: str, upto_round: int) -> DataFram
         for r in range(start, upto_round + 1)
     ]
     if live:
-        parts.append(spark.read.schema(_FRONTIER_READ).parquet(*map(_spark_path, live)))
+        parts.append(spark.read.schema(_FRONTIER_READ).parquet(*map(spark_path, live)))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -496,7 +496,7 @@ def read_frontier(spark: SparkSession, chk_dir: str, rnd: int) -> DataFrame:
     """The round-``rnd`` queue, trimmed to the loop's working columns."""
     direct = os.path.join(round_dir(chk_dir, rnd), "frontier")
     if os.path.isdir(direct):
-        df = spark.read.schema(_FRONTIER_READ).parquet(_spark_path(direct))
+        df = spark.read.schema(_FRONTIER_READ).parquet(spark_path(direct))
     else:  # round folded into the compacted base
         df = _frontier_df(spark, chk_dir, rnd).filter(F.col("round") == rnd)
     return df.select("url", "host", "depth", "arrival_rank")

@@ -1,9 +1,22 @@
-"""The crawl driver: level-synchronous BFS loop + extraction pass.
+"""The crawl driver: level-synchronous BFS loop + documents output.
 
-≙ crawl_with_discovery (/root/reference/crawler.py:602-655): Phase 1 runs
-one round per BFS level with checkpoint commits between rounds (resume =
-start from the last committed manifest); Phase 2 joins the discovered set
-back against pages and extracts documents in one Arrow pass.
+≙ crawl_with_discovery (/root/reference/crawler.py:602-655): one round per
+BFS level with checkpoint commits between rounds (resume = start from the
+last committed manifest).
+
+A checkpoint has one of two modes, fixed at bootstrap by the first run's
+``extract`` and recorded in the manifest as ``fused``:
+
+* fused (``extract=True``): each round extracts its pattern-matched pages'
+  documents inside the pass that visits them, so the reference's separate
+  Phase-2 scan (crawler.py:547-599) does not exist; the documents table is
+  a view over the committed visited rows.
+* discovery (``extract=False``): rounds only visit and expand. Resuming such
+  a checkpoint with ``extract=True`` finishes discovery in that mode and
+  then extracts the discovered pages in one ``extract_pass``.
+
+Resuming a fused checkpoint with ``extract=False`` returns
+``documents=None``.
 
 A round runs in one of two tiers, picked per round from the manifest's
 ``frontier_n`` / ``enqueued_n`` (no job to decide):
@@ -32,8 +45,6 @@ from __future__ import annotations
 
 import json
 import os
-import sys
-import time
 from dataclasses import dataclass
 from pathlib import Path
 from typing import Callable, Dict, List, Optional, Union
@@ -63,6 +74,7 @@ from crawl4ai_scraper_spark.plans.checkpoint import (
     read_frontier,
     read_state,
     reset_checkpoint,
+    spark_path,
     visited_schema,
     visited_vt_max,
 )
@@ -75,29 +87,9 @@ from crawl4ai_scraper_spark.plans.local import (
 )
 from crawl4ai_scraper_spark.plans.politeness import template_trap_stats, virtual_schedule
 from crawl4ai_scraper_spark.sizing import LOCAL_ROUND_MAX
-from crawl4ai_scraper_spark.sources.pages import DEFAULT_PBUCKETS, with_pbucket
+from crawl4ai_scraper_spark.sources.pages import DEFAULT_PBUCKETS
 
 RUN_TS_ISO = "2025-01-01T00:00:00"  # virtual clock epoch: reproducible crawled_at
-
-_PROFILE = bool(os.environ.get("SPARK_GRAFT_PROFILE"))
-
-
-class _Timer:
-    """Env-gated (SPARK_GRAFT_PROFILE=1) phase timer for the round loop."""
-
-    def __init__(self, tag: str):
-        self.tag = tag
-        self.last = time.perf_counter()
-
-    def lap(self, label: str) -> None:
-        if _PROFILE:
-            now = time.perf_counter()
-            print(f"[profile {self.tag}] {label}: {now - self.last:.2f}s",
-                  file=sys.stderr, flush=True)
-            self.last = now
-        else:
-            self.last = time.perf_counter()
-
 
 @dataclass
 class CrawlResult:
@@ -123,16 +115,18 @@ def run_crawl(
     priority_col: Optional[Union[Callable[[DataFrame], Column], DataFrame]] = None,
     n_buckets: Optional[int] = None,
     max_rounds: Optional[int] = None,  # stop early (kill simulation / tests)
-    fused_extract: bool = True,
     blocked_hosts: Optional[DataFrame] = None,  # URL screening (url_blocklist_filter)
 ) -> CrawlResult:
-    """Run the full crawl. ``fused_extract`` (default) extracts each
-    pattern-matched page's document INSIDE the discovery round that visits it
-    — the page's html is already streaming through the expansion Arrow pass,
-    so the reference's separate Phase-2 scan of every discovered page
-    (crawler.py:547-599) disappears; output is byte-identical either way.
-    A resumed crawl must keep the mode of its first run (the visited-state
-    schema differs)."""
+    """Run the full crawl. ``extract=True`` extracts each pattern-matched
+    page's document INSIDE the round that visits it — the page's html is
+    already streaming through the expansion Arrow pass — and
+    ``extract=False`` only discovers.
+
+    The checkpoint's mode is fixed at bootstrap (the visited-state schema
+    differs), so a resume continues in the mode its first run chose:
+    ``extract=True`` on a discovery checkpoint finishes discovery and then
+    extracts the discovered pages in one ``extract_pass``, and
+    ``extract=False`` on a fused checkpoint returns ``documents=None``."""
     seed_domain = extract_domain(seed_url)
     # The fetch join computes pbucket = pmod(xxhash64(url), N); N MUST equal
     # the modulus the pages table was written with or lookups silently miss.
@@ -155,7 +149,7 @@ def run_crawl(
             chk_dir, seed_url, urlparse(seed_url).netloc,
             {"seq_base": 0, "discovered": 0, "round_vt": 0.0, "bootstrap": True, "done": False,
              "frontier_n": 1, "enqueued_n": 1,
-             "fused": bool(extract and fused_extract),
+             "fused": bool(extract),
              # sizing decision in lineage: what this run actually ran
              # with, derived or overridden, auditable per-crawl
              "runtime_sizing": {
@@ -255,7 +249,6 @@ def run_crawl(
         # Bloom pre-filter pays off once the seen set dwarfs the candidate
         # stream; below the threshold the build job costs more than the
         # anti-join it would shave ("auto"). Correctness never depends on it.
-        timer = _Timer(f"round {rnd}")
         build_it = use_bloom is True or (use_bloom == "auto" and enqueued_n > 5_000_000)
         if (pages_root is not None and not build_it
                 and frontier_n <= LOCAL_ROUND_MAX and enqueued_n <= LOCAL_ROUND_MAX):
@@ -317,7 +310,6 @@ def run_crawl(
                     bloom = build_bloom(enqueued, "url", capacity=cap,
                                         fpp=cfg.bloom_fpp)
                 seen_state = (bloom, cap, enqueued_n)
-            timer.lap("seen-filter build")
         rr = run_round(
             pages, frontier, enqueued, cfg, seed_domain,
             seq_base=seq_base, discovered_so_far=discovered_n,
@@ -326,7 +318,6 @@ def run_crawl(
             extraction=extraction, blocked_hosts=blocked_hosts,
             blocked_templates=blocked_templates,
         )
-        timer.lap("run_round (one action: combined count agg)")
         # The PREVIOUS round's visited write has been overlapping this scan;
         # join it now — virtual_schedule below needs its round_vt. On a
         # finalize failure, free this round's caches too before propagating
@@ -337,7 +328,6 @@ def run_crawl(
             for cached in rr.caches:
                 cached.unpersist()
             raise
-        timer.lap("finalize previous commit (overlapped with scan)")
         visits = virtual_schedule(
             rr.visits, host_rules, cfg.delay_between_requests, round_vt
         )
@@ -374,7 +364,6 @@ def run_crawl(
                 blocked_templates = spark.createDataFrame(
                     sorted(trap_templates), "host string, tpl string"
                 )
-            timer.lap("trap screen")
 
         # ---- deferred snapshot commit: the frontier (next round's input)
         # and lineage land NOW; the heavy visited write (fused rows carry
@@ -418,7 +407,6 @@ def run_crawl(
             "vt_in": round_vt, "done": done, "caches": rr.caches,
         })
         enqueued_n += frontier_n
-        timer.lap("commit start (frontier+lineage written; visited deferred)")
         last = rnd
         rnd += 1
 
@@ -457,8 +445,9 @@ def extract_pass(
     n_buckets: int = 32,
     n_discovered: Optional[int] = None,
 ) -> tuple[DataFrame, Dict]:
-    """Phase 2 ≙ ContentCrawler.crawl_urls (crawler.py:547-599): fetch join,
-    one Arrow extraction pass, native formatting, documents_out + summary."""
+    """Phase 2 ≙ ContentCrawler.crawl_urls (crawler.py:547-599) for a
+    discovery checkpoint resumed with ``extract=True``: fetch join, one
+    Arrow extraction pass, native formatting, documents_out + summary."""
     from crawl4ai_scraper_spark.plans.frontier import fetch_join
 
     fetch = fetch_join(
@@ -542,7 +531,7 @@ def rematerialize_documents(
     ).withColumn("formatted", F.when(F.col("success"), _formatted_col(cfg)))
     if out_dir:
         out.write.mode("overwrite").parquet(out_dir)
-        out = spark.read.parquet(out_dir)
+        out = spark.read.parquet(spark_path(out_dir))
     return out
 
 
@@ -558,7 +547,7 @@ def _finalize_documents(
     if materialize:
         out_dir = os.path.join(chk_dir, "outputs", "documents")
         docs.write.mode("overwrite").parquet(out_dir)
-        docs = spark.read.parquet(out_dir)
+        docs = spark.read.parquet(spark_path(out_dir))
 
     agg = docs.agg(
         F.count(F.lit(1)).alias("total_urls"),

@@ -28,13 +28,10 @@ Parity invariants with the reference loop (crawler.py:179-238):
 
 from __future__ import annotations
 
-import os
-import sys
-import time
 from dataclasses import dataclass, field
 from typing import Callable, Dict, Optional, Union
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from crawl4ai_scraper_spark.config import CrawlJobConfig
@@ -56,15 +53,6 @@ from crawl4ai_scraper_spark.plans.politeness import (
 )
 from crawl4ai_scraper_spark.plans.ranking import global_rank
 from crawl4ai_scraper_spark.sources.pages import with_pbucket
-
-_PROFILE = bool(os.environ.get("SPARK_GRAFT_PROFILE"))
-
-
-def _lap(t0: float, label: str) -> float:
-    now = time.perf_counter()
-    if _PROFILE:
-        print(f"[profile   round-int] {label}: {now - t0:.2f}s", file=sys.stderr, flush=True)
-    return now
 
 
 @dataclass
@@ -150,7 +138,6 @@ def run_round(
     # with no stored page (fetch failures) are recovered by a tiny anti-join
     # against the emitted visit rows. Above the broadcast threshold both
     # sides shuffle (classic left join) and the UDF sees html=null for misses.
-    t0 = time.perf_counter()
     fr = with_pbucket(frontier, n_buckets)
     n_frontier = frontier_count if frontier_count is not None else frontier.count()
     in_cols = ["url", "host", "depth", "arrival_rank", "html"]
@@ -204,64 +191,34 @@ def run_round(
         # dialect divergence can never yield matched=true rows with null docs.
         matched_pred = F.coalesce(F.col("doc_matched"), F.lit(False))
 
-    # ---- round stats ----
-    # Two regimes (VERDICT r4 #4 — shave the per-round serial slivers):
-    #
-    # DEFERRED (the normal mid-crawl regime): when budget truncation is
-    # impossible this round — every dequeued URL yields at most one matched
-    # page, so matched_new <= n_frontier < remaining — and extraction is
-    # fused (final_part is empty by construction: fusion disables the
-    # max-depth probe split), the ok/matched/links scalars need NO job of
-    # their own. They ride the global-rank chain's first action as
-    # ``DataFrame.observe()`` metrics over the same cached expansion: the
-    # rank chain's range-sampling job is what materializes the cache, and
-    # the CollectMetrics node rides that traversal for free.
-    #
-    # EAGER (one job): potentially-final rounds — the budget decision must
-    # precede the candidate chain — and non-fused crawls, where final_part
-    # carries stats of its own. Aggregates over BOTH join sides (union of
-    # two pre-aggregated single rows) in a single action: materializes the
-    # expanded cache exactly once — referencing it from several
-    # unmaterialized branches would recompute the whole Arrow pass per
-    # branch — and yields every scalar the round needs. Total visits ≡
-    # frontier size (every dequeued URL is a visit, crawler.py:180-189), so
-    # it is never counted with a job.
+    # ---- round stats (one job) ----
+    # Aggregates over BOTH join sides (union of two pre-aggregated single
+    # rows) in a single action: materializes the expanded cache exactly once
+    # — referencing it from several unmaterialized branches would recompute
+    # the whole Arrow pass per branch — and yields every scalar the round
+    # needs, before the budget decision that the candidate chain depends on.
+    # Total visits ≡ frontier size (every dequeued URL is a visit,
+    # crawler.py:180-189), so it is never counted with a job.
     kind0 = F.col("kind") == 0
     remaining = cfg.max_pages - discovered_so_far
-    defer_stats = (extraction is not None and n_frontier < remaining
-                   and n_frontier <= cfg.defer_stats_max_frontier
-                   and not os.environ.get("SPARK_GRAFT_EAGER_STATS"))
-    obs: Optional[Observation] = None
-    links_src = expanded  # feeds the candidate chain; observed frame in defer mode
-    if defer_stats:
-        obs = Observation()
-        links_src = expanded.observe(
-            obs,
+    stats = (
+        expanded.agg(
             F.count(F.when(kind0 & F.col("success"), 1)).alias("ok"),
             F.count(F.when(kind0 & F.col("success") & matched_pred, 1)).alias("m"),
             F.count(F.when(F.col("kind") == 1, 1)).alias("links"),
         )
-        n_visited = n_frontier
-        n_ok = matched_count = n_links = None  # resolved after the rank chain
-    else:
-        stats = (
-            expanded.agg(
-                F.count(F.when(kind0 & F.col("success"), 1)).alias("ok"),
-                F.count(F.when(kind0 & F.col("success") & matched_pred, 1)).alias("m"),
-                F.count(F.when(F.col("kind") == 1, 1)).alias("links"),
+        .unionByName(
+            final_part.agg(
+                F.count(F.when(F.col("success"), 1)).alias("ok"),
+                F.count(F.when(F.col("success") & matched_pred, 1)).alias("m"),
+                F.count(F.lit(None)).alias("links"),
             )
-            .unionByName(
-                final_part.agg(
-                    F.count(F.when(F.col("success"), 1)).alias("ok"),
-                    F.count(F.when(F.col("success") & matched_pred, 1)).alias("m"),
-                    F.count(F.lit(None)).alias("links"),
-                )
-            )
-            .agg(F.sum("ok").alias("ok"), F.sum("m").alias("m"), F.sum("links").alias("links"))
-            .collect()[0]
         )
-        n_visited, n_ok = n_frontier, int(stats["ok"])
-        matched_count, n_links = int(stats["m"]), int(stats["links"])
+        .agg(F.sum("ok").alias("ok"), F.sum("m").alias("m"), F.sum("links").alias("links"))
+        .collect()[0]
+    )
+    n_visited, n_ok = n_frontier, int(stats["ok"])
+    matched_count, n_links = int(stats["m"]), int(stats["links"])
 
     visit_rows = expanded.filter(kind0).select(*visit_cols).unionByName(final_part)
     if broadcast_path:  # frontier rows with no stored page = fetch failures
@@ -273,12 +230,7 @@ def run_round(
     caches.append(visits)
 
     # ---- exact mid-level budget truncation (O-28) ----
-    # defer mode: truncation was proven impossible above (n_frontier <
-    # remaining), so the whole block is statically False there.
-    t0 = _lap(t0, "scan+expand plan built (stats deferred to rank chain)"
-              if defer_stats else
-              "scan+expand (one pass) + combined count agg")
-    truncated = (not defer_stats) and matched_count >= remaining
+    truncated = matched_count >= remaining
     stop = None
     if truncated:
         stop = (
@@ -300,10 +252,7 @@ def run_round(
     # A round that emitted no links (every visit at max_depth, or all fetches
     # failed) skips the whole dedup/rank pipeline — otherwise the anti-join
     # would still shuffle the full enqueued set against an empty frame.
-    # (Defer mode can't know n_links yet and proceeds unconditionally: AQE's
-    # empty-relation propagation collapses the downstream shuffles the
-    # moment the first-appender stage materializes zero rows.)
-    if not defer_stats and n_links == 0:
+    if n_links == 0:
         spark = frontier.sparkSession
         new_frontier = spark.createDataFrame([], FRONTIER_FILE_SCHEMA)
         counts = {
@@ -334,7 +283,7 @@ def run_round(
         )
 
     # ---- candidate links (already expanded above; native filters only) ----
-    candidates = links_src.filter(F.col("kind") == 1).select(
+    candidates = expanded.filter(F.col("kind") == 1).select(
         F.col("url").alias("parent_url"),
         (F.lit(seq_base) + F.col("arrival_rank")).cast("long").alias("parent_seq"),
         F.col("depth").alias("parent_depth"),
@@ -467,31 +416,6 @@ def run_round(
     caches.append(next_rows)
     ranked = global_rank(next_rows, order_cols, "arrival_rank", caches=caches).persist()
     caches.append(ranked)
-    t0 = _lap(t0, "global_rank build (incl. offsets collect)")
-
-    if defer_stats:
-        # The rank chain's first action (global_rank's range sampling /
-        # offsets collect — guaranteed to have run by now) materialized the
-        # expansion cache; the observation resolved with it. Zero extra job.
-        try:
-            row = obs.get
-            n_ok, matched_count, n_links = (
-                int(row["ok"]), int(row["m"]), int(row["links"]))
-        except Exception:
-            # Zero-link rounds: AQE's empty-relation propagation eliminates
-            # the CollectMetrics node once the first-appender stage
-            # materializes empty, so the observation completes with a
-            # schemaless empty row and obs.get raises (Spark 4.1 toPyRow
-            # assertion). Recover with one agg over the expansion cache the
-            # rank chain just materialized — i.e. pay the stats job only on
-            # rounds that emit no links at all.
-            srow = expanded.agg(
-                F.count(F.when(kind0 & F.col("success"), 1)).alias("ok"),
-                F.count(F.when(kind0 & F.col("success") & matched_pred, 1)).alias("m"),
-                F.count(F.when(F.col("kind") == 1, 1)).alias("links"),
-            ).collect()[0]
-            n_ok, matched_count, n_links = (
-                int(srow["ok"]), int(srow["m"]), int(srow["links"]))
 
     new_edges = ranked.select("parent_url", F.col("url").alias("child_url"), "link_pos")
     new_frontier = ranked.select("url", "host", "depth", "arrival_rank",

@@ -773,34 +773,6 @@ def test_fresh_crawl_into_compacted_dir_resets_state(spark, pages3, web3, chk_di
     assert_parity(res, oracle_crawl(fetch, SEED, cfg_b), check_text=False)
 
 
-def test_deferred_and_eager_stats_paths_agree(spark, pages3, web3, chk_dir):
-    """Round-5 deferred-stats path (observe() metrics riding the rank chain)
-    must be bit-equivalent to the eager one-job agg: same visit order, same
-    summary scalars, same frontier snapshots. defer_stats_max_frontier=0
-    forces every round eager; the default defers every round of this small
-    corpus."""
-    from crawl4ai_scraper_spark.plans.checkpoint import latest_round, read_frontier
-
-    cfg_d = CrawlJobConfig(max_depth=3, max_pages=400,
-                           defer_stats_max_frontier=1_000_000)  # opt-in
-    cfg_e = CrawlJobConfig(max_depth=3, max_pages=400)  # default: eager
-    res_d = run_crawl(spark, pages3, SEED, cfg_d, chk_dir)
-    chk_e = chk_dir + "_eager"
-    res_e = run_crawl(spark, pages3, SEED, cfg_e, chk_e)
-
-    vis = lambda r: [(x["url"], x["seq"], x["success"], x["matched"])
-                     for x in r.visited.orderBy("seq").collect()]
-    assert vis(res_d) == vis(res_e)
-    assert res_d.summary == res_e.summary
-    assert latest_round(chk_dir) == latest_round(chk_e)
-    for rnd in range(1, latest_round(chk_dir) + 1):
-        fd = sorted(tuple(r) for r in
-                    read_frontier(spark, chk_dir, rnd).collect())
-        fe = sorted(tuple(r) for r in
-                    read_frontier(spark, chk_e, rnd).collect())
-        assert fd == fe, f"frontier snapshot diverges at round {rnd}"
-
-
 def test_checkpoint_bookkeeping_runs_no_spark_job(spark, chk_dir):
     """The round-0 commit and building every checkpoint read frame start no
     Spark job: round 0 is written on the driver, and the readers declare

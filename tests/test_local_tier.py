@@ -232,13 +232,18 @@ def test_local_checkpoint_no_larger_than_spark(spark, pages3, chk_dir, extract):
     assert _bytes(chk_dir + "_l") <= _bytes(chk_dir + "_s")
 
 
-def test_glob_characters_in_chk_dir(spark, pages3, web3, chk_dir):
-    """``[`` / ``]`` in the checkpoint path are literal for the Spark readers
-    and the footer scans: a fresh crawl and its resume both complete."""
+@pytest.mark.parametrize("first", ["fused", "discovery"])
+def test_glob_characters_in_chk_dir(spark, pages3, web3, chk_dir, first):
+    """``[`` / ``]`` in the checkpoint path are literal for the Spark readers,
+    the footer scans and the documents read-back: a fresh crawl and its
+    resume with extraction both complete. A discovery checkpoint resumed
+    with ``extract=True`` extracts in ``extract_pass``, which writes the
+    documents under the checkpoint and reads them back."""
     _, _, fetch = web3
     cfg = CrawlJobConfig(max_depth=3, max_pages=40)
-    chk = os.path.join(chk_dir, "x[fused]")
-    part = run_crawl(spark, pages3, SEED, cfg, chk, max_rounds=2, tier="spark")
+    chk = os.path.join(chk_dir, f"x[{first}]")
+    part = run_crawl(spark, pages3, SEED, cfg, chk, max_rounds=2, extract=first == "fused",
+                     tier="spark")
     assert part.rounds == 2 and part.visited.count() == 9
     res = run_crawl(spark, pages3, SEED, cfg, chk, resume=True)
     assert_oracle_equal(res, oracle_crawl(fetch, SEED, cfg), True)
