@@ -10,7 +10,8 @@ mirrors the reference's config save/load round-trip
 from __future__ import annotations
 
 import json
-from dataclasses import asdict, dataclass, field
+import warnings
+from dataclasses import asdict, dataclass, field, fields
 from pathlib import Path
 from typing import List, Optional
 
@@ -123,7 +124,27 @@ class CrawlJobConfig:
 
     @classmethod
     def load(cls, path: Path) -> "CrawlJobConfig":
-        return cls(**json.loads(Path(path).read_text()))
+        return cls.from_settings(json.loads(Path(path).read_text()))
+
+    @classmethod
+    def from_settings(cls, settings: dict) -> "CrawlJobConfig":
+        """A config from stored settings. A field that an earlier version
+        stored and this one removed (``REMOVED_FIELDS``) is dropped with a
+        warning that names it, so configs saved before the removal still
+        load; any other unknown key is an error that names it."""
+        names = {f.name for f in fields(cls)}
+        removed = sorted(k for k in settings if k in REMOVED_FIELDS)
+        unknown = sorted(k for k in settings if k not in names and k not in REMOVED_FIELDS)
+        if unknown:
+            raise TypeError(f"unknown config fields: {', '.join(unknown)}")
+        if removed:
+            warnings.warn(f"ignoring removed config fields: {', '.join(removed)}", stacklevel=2)
+        return cls(**{k: v for k, v in settings.items() if k in names})
+
+
+# Fields that stored configs may still hold but that no longer exist:
+# ``defer_stats_max_frontier`` went with the deferred-stats round path.
+REMOVED_FIELDS = frozenset({"defer_stats_max_frontier"})
 
 
 # Presets mirroring config_manager.py:264-339 (data-affecting fields only).
@@ -180,7 +201,7 @@ class ConfigStore:
         if not path.exists():
             return None
         data = json.loads(path.read_text())
-        return CrawlJobConfig(**data.get("settings", {}))
+        return CrawlJobConfig.from_settings(data.get("settings", {}))
 
     def list(self) -> List[dict]:
         """Config summaries (name, description, file_path), name-sorted."""
@@ -222,7 +243,7 @@ class ConfigStore:
         try:
             data = json.loads(import_path.read_text())
             settings = data.get("settings", {})
-            cfg = CrawlJobConfig(**settings)  # validates the field names
+            cfg = CrawlJobConfig.from_settings(settings)  # validates the field names
         except Exception:
             return None
         final = name or data.get("name", import_path.stem)

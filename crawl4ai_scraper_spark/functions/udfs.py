@@ -22,8 +22,9 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from crawl4ai_scraper_spark.kernel.cleaning import CleaningConfig
+from crawl4ai_scraper_spark.kernel.expand import DOC_COLS as _DOC_COLS
+from crawl4ai_scraper_spark.kernel.expand import expand_rows
 from crawl4ai_scraper_spark.kernel.extraction import extract_record
-from crawl4ai_scraper_spark.kernel.htmlkit import decode_html, scan_links
 from crawl4ai_scraper_spark.kernel.naming import output_rel_path
 from crawl4ai_scraper_spark.kernel.urls import canon_url, wildcard_to_regex
 
@@ -89,9 +90,6 @@ VISIT_EXPAND_SCHEMA = (
     "child_host string"
 )
 
-# Fused mode: visit rows additionally carry the full extracted document.
-_DOC_COLS = ("title", "description", "markdown", "content_length", "links_count",
-             "user_agent", "rel_path")
 VISIT_EXPAND_DOC_SCHEMA = VISIT_EXPAND_SCHEMA + (
     ", title string, description string, markdown string, content_length long, "
     "links_count long, user_agent string, rel_path string, doc_matched boolean"
@@ -99,101 +97,29 @@ VISIT_EXPAND_DOC_SCHEMA = VISIT_EXPAND_SCHEMA + (
 
 
 def visit_and_expand(max_depth: int, extraction: Optional[dict] = None):
-    """Single-pass round kernel: fetched page batches → a per-page VISIT row
-    (kind=0) plus one LINK row per internal link (kind=1), canonicalized
-    against the parent. One Arrow pass touches ``html``; every downstream
-    frame of the round (visits bookkeeping, budget cut, dedup, rank) is
-    html-free — at 10^10 scale the binary column never enters a shuffle.
+    """Single-pass round kernel as a ``mapInPandas`` batch function: fetched
+    page batches → a per-page VISIT row (kind=0) plus one LINK row per
+    internal link (kind=1), canonicalized against the parent. One Arrow pass
+    touches ``html``; every downstream frame of the round (visits
+    bookkeeping, budget cut, dedup, rank) is html-free — at 10^10 scale the
+    binary column never enters a shuffle.
 
     FUSED EXTRACTION: with ``extraction`` set, pattern-MATCHED successful
     visits also get the full document record (byte-identical text, output
     path) in the same pass — the page's html is already in worker memory, so
     the reference's separate Phase-2 extraction scan (crawler.py:547-599) is
-    folded away entirely. ``extraction`` keys: cleaning (CleaningConfig
-    kwargs), naming (strategy, convention, run_ts_iso), patterns,
-    exclude_patterns. Output schema becomes VISIT_EXPAND_DOC_SCHEMA.
+    folded away entirely. Output schema becomes VISIT_EXPAND_DOC_SCHEMA.
 
-    Input columns: url, host, depth, arrival_rank, html (html may be null on
-    the shuffled-join fallback path; null → failed visit, no links).
+    Each batch is one ``kernel.expand.expand_rows`` call — the kernel the
+    driver-local tier runs too. Input columns: url, host, depth,
+    arrival_rank, html (html may be null on the shuffled-join fallback path;
+    null → failed visit, no links).
     """
-    from datetime import datetime
-    from urllib.parse import urlparse
-
-    from crawl4ai_scraper_spark.kernel.urls import match_url_pattern
 
     def _expand(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("kind", "url", "host", "depth", "arrival_rank", "success",
-                "link_pos", "child_url", "child_domain", "child_host")
-        ext = None
-        if extraction is not None:
-            strategy, convention, run_ts_iso = extraction["naming"]
-            ext = {
-                "cleaning": CleaningConfig.build(**extraction.get("cleaning", {})),
-                "strategy": strategy,
-                "convention": convention,
-                "run_ts_iso": run_ts_iso,
-                "run_ts": datetime.fromisoformat(run_ts_iso),
-                "patterns": extraction.get("patterns") or [],
-                "exclude": extraction.get("exclude_patterns") or [],
-            }
-            # doc_matched is the SINGLE source of truth for pattern membership
-            # in fused mode (the round's matched column reuses it; see
-            # frontier.run_round) — JVM rlike never re-evaluates the patterns.
-            cols = cols + _DOC_COLS + ("doc_matched",)
         for pdf in it:
-            out = {k: [] for k in cols}
-            for url, host, depth, rank, html in zip(
-                pdf["url"], pdf["host"], pdf["depth"], pdf["arrival_rank"], pdf["html"]
-            ):
-                ok = html is not None
-                out["kind"].append(0)
-                out["url"].append(url)
-                out["host"].append(host)
-                out["depth"].append(int(depth))
-                out["arrival_rank"].append(int(rank))
-                out["success"].append(ok)
-                out["link_pos"].append(None)
-                out["child_url"].append(None)
-                out["child_domain"].append(None)
-                out["child_host"].append(None)
-                if ext is not None:
-                    m = bool(ok and match_url_pattern(url, ext["patterns"], ext["exclude"]))
-                    out["doc_matched"].append(m)
-                    if m:
-                        rec = extract_record(url, html, ext["run_ts_iso"], ext["cleaning"])
-                        rec["rel_path"] = output_rel_path(
-                            url, rec["title"] or "Untitled",
-                            ext["strategy"], ext["convention"], ext["run_ts"],
-                        )
-                        for c in _DOC_COLS:
-                            out[c].append(rec.get(c))
-                    else:
-                        for c in _DOC_COLS:
-                            out[c].append(None)
-                if not ok or int(depth) >= max_depth:
-                    continue  # leaves are never expanded (crawler.py:210)
-                # scan_links = links-only fast path, differentially tested
-                # against the HTMLParser ground truth (extract_links)
-                for link in scan_links(decode_html(html), url):
-                    if not link["is_internal"] or not link["href"]:
-                        continue  # the reference iterates links['internal'] only
-                    child = canon_url(link["href"], url)
-                    parsed = urlparse(child)
-                    out["kind"].append(1)
-                    out["url"].append(url)
-                    out["host"].append(host)
-                    out["depth"].append(int(depth))
-                    out["arrival_rank"].append(int(rank))
-                    out["success"].append(True)
-                    out["link_pos"].append(int(link["link_pos"]))
-                    out["child_url"].append(child)
-                    out["child_domain"].append(f"{parsed.scheme}://{parsed.netloc}")
-                    out["child_host"].append(parsed.netloc)
-                    if ext is not None:
-                        out["doc_matched"].append(None)
-                        for c in _DOC_COLS:
-                            out[c].append(None)
-            yield pd.DataFrame(out)
+            rows = zip(pdf["url"], pdf["host"], pdf["depth"], pdf["arrival_rank"], pdf["html"])
+            yield pd.DataFrame(expand_rows(max_depth, extraction, rows))
 
     return _expand
 

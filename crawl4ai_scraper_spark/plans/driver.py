@@ -39,6 +39,11 @@ the driver, round 1 reads it back through ``read_frontier`` /
 ``read_enqueued`` like every later round and a resume, the readers declare
 their schemas, and the post-commit scalars (frontier size, round_vt) come
 from parquet footers. Spark jobs run only for round plans and their writes.
+The tail of a fused crawl runs none either: every round adds its matched
+documents' ``content_length`` to the manifest's ``total_content_length``, so
+the summary is read from the last manifest (a checkpoint written before
+manifests carried the total, and ``extract_pass``, still aggregate). A crawl
+whose rounds all ran locally starts no Spark job.
 """
 
 from __future__ import annotations
@@ -150,6 +155,7 @@ def run_crawl(
             {"seq_base": 0, "discovered": 0, "round_vt": 0.0, "bootstrap": True, "done": False,
              "frontier_n": 1, "enqueued_n": 1,
              "fused": bool(extract),
+             "total_content_length": 0 if extract else None,
              # sizing decision in lineage: what this run actually ran
              # with, derived or overridden, auditable per-crawl
              "runtime_sizing": {
@@ -168,6 +174,10 @@ def run_crawl(
     rnd = last + 1
     seq_base = meta["seq_base"]
     discovered_n = meta["discovered"]
+    # fused checkpoints: the matched documents' summed content_length, so the
+    # summary needs no job (None in discovery mode, and for a checkpoint
+    # written before manifests carried it — its summary runs the agg)
+    content_total = meta.get("total_content_length")
     round_vt = meta["round_vt"]
     done = meta.get("done", False)
     frontier_n = (meta["frontier_n"] if "frontier_n" in meta
@@ -262,11 +272,14 @@ def run_crawl(
             round_vt_out = lr.schedule(round_vt, cfg.delay_between_requests)
             seq_base += lr.counts["visited"]
             discovered_n += lr.counts["matched_new"]
+            if content_total is not None:
+                content_total += lr.content_length
             frontier_n = lr.counts["frontier_out"]
             done = lr.truncated or frontier_n == 0
             enqueued_n += frontier_n
             commit_round_local(chk_dir, rnd, lr, fused, {
-                "seq_base": seq_base, "discovered": discovered_n, "fused": fused,
+                "seq_base": seq_base, "discovered": discovered_n,
+                "total_content_length": content_total, "fused": fused,
                 "trap_templates": sorted(trap_templates), "tier": "local",
                 "counts": lr.counts, "frontier_n": frontier_n, "enqueued_n": enqueued_n,
                 "round_vt": round_vt_out, "done": done,
@@ -343,6 +356,8 @@ def run_crawl(
 
         seq_base += rr.counts["visited"]
         discovered_n += rr.counts["matched_new"]
+        if content_total is not None:
+            content_total += rr.content_length
 
         if cfg.trap_screen and fused:
             stats = template_trap_stats(
@@ -381,7 +396,8 @@ def run_crawl(
                     "visited": visits.select(*visited_schema(fused).fieldNames()),
                     "lineage": rr.lineage,
                 },
-                {"seq_base": seq_base, "discovered": discovered_n, "fused": fused,
+                {"seq_base": seq_base, "discovered": discovered_n,
+                 "total_content_length": content_total, "fused": fused,
                  "trap_templates": sorted(trap_templates), "tier": "spark"},
                 # fused visited rows are weighted 16x so the snapshot
                 # writer's rows//250k file heuristic lands near one write
@@ -421,7 +437,11 @@ def run_crawl(
 
     documents, summary = (None, {})
     if extract and fused:
-        documents, summary = fused_documents(spark, visited, cfg, chk_dir)
+        known = None
+        if content_total is not None:  # every document is a matched visit
+            known = {"total_urls": discovered_n, "successful": discovered_n, "failed": 0,
+                     "total_content_length": content_total}
+        documents, summary = fused_documents(spark, visited, cfg, chk_dir, summary=known)
     elif extract:
         documents, summary = extract_pass(spark, pages, discovered, cfg, chk_dir, n_buckets,
                                           n_discovered=discovered_n)
@@ -472,19 +492,21 @@ def fused_documents(
     visited: DataFrame,
     cfg: CrawlJobConfig,
     chk_dir: str,
+    summary: Optional[Dict] = None,
 ) -> tuple[DataFrame, Dict]:
     """documents_out from FUSED visit rows — the matched visits already carry
     the extracted record (visit_and_expand with extraction), AND that content
     is already durable in the committed visited snapshots, so the documents
     table is a lazy VIEW over them (formatting is native concat) — no second
-    pages scan and no redundant re-write of ~N GB of text. Only the summary
-    aggregate runs eagerly (and lands in crawl_summary.json as ever)."""
+    pages scan and no redundant re-write of ~N GB of text. The summary
+    (crawl_summary.json) is ``summary`` when the caller knows it from the
+    manifest, else one aggregate job."""
     docs = visited.filter("matched").select(
         "url", "title", "description", "markdown", "content_length", "links_count",
         F.lit(RUN_TS_ISO).alias("crawled_at"), F.lit(True).alias("success"),
         "user_agent", F.lit(None).cast("string").alias("error"), "rel_path",
     )
-    return _finalize_documents(spark, docs, cfg, chk_dir, materialize=False)
+    return _finalize_documents(spark, docs, cfg, chk_dir, materialize=False, summary=summary)
 
 
 def _formatted_col(cfg: CrawlJobConfig) -> F.Column:
@@ -541,6 +563,7 @@ def _finalize_documents(
     cfg: CrawlJobConfig,
     chk_dir: str,
     materialize: bool = True,
+    summary: Optional[Dict] = None,
 ) -> tuple[DataFrame, Dict]:
     docs = docs.withColumn("formatted", F.when(F.col("success"), _formatted_col(cfg)))
 
@@ -549,15 +572,16 @@ def _finalize_documents(
         docs.write.mode("overwrite").parquet(out_dir)
         docs = spark.read.parquet(spark_path(out_dir))
 
-    agg = docs.agg(
-        F.count(F.lit(1)).alias("total_urls"),
-        F.count(F.when(F.col("success"), 1)).alias("successful"),
-        F.count(F.when(~F.col("success"), 1)).alias("failed"),
-        F.coalesce(F.sum(F.when(F.col("success"), F.col("content_length"))), F.lit(0)).alias(
-            "total_content_length"
-        ),
-    ).collect()[0]
-    summary = {k: int(agg[k]) for k in ("total_urls", "successful", "failed", "total_content_length")}
+    if summary is None:
+        agg = docs.agg(
+            F.count(F.lit(1)).alias("total_urls"),
+            F.count(F.when(F.col("success"), 1)).alias("successful"),
+            F.count(F.when(~F.col("success"), 1)).alias("failed"),
+            F.coalesce(F.sum(F.when(F.col("success"), F.col("content_length"))),
+                       F.lit(0)).alias("total_content_length"),
+        ).collect()[0]
+        summary = {k: int(agg[k])
+                   for k in ("total_urls", "successful", "failed", "total_content_length")}
     os.makedirs(os.path.join(chk_dir, "outputs"), exist_ok=True)
     with open(os.path.join(chk_dir, "outputs", "crawl_summary.json"), "w") as fh:
         json.dump(summary, fh, indent=2, sort_keys=True)  # ≙ crawler.py:594-597

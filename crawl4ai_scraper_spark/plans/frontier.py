@@ -64,6 +64,8 @@ class RoundResult:
     truncated: bool = False
     lineage: Optional[DataFrame] = None
     caches: list = field(default_factory=list)  # persisted frames → unpersist after commit
+    # fused rounds: sum of the kept matched visits' content_length
+    content_length: Optional[int] = None
 
 
 def _partition_counts(df: DataFrame, stage: str) -> DataFrame:
@@ -201,24 +203,35 @@ def run_round(
     # crawler.py:180-189), so it is never counted with a job.
     kind0 = F.col("kind") == 0
     remaining = cfg.max_pages - discovered_so_far
+    # fused rounds also sum the matched documents' content_length, which the
+    # manifest carries so the crawl's summary needs no job
+    fused = extraction is not None
+
+    def matched_length(pred: Column) -> list:
+        return [F.sum(F.when(pred, F.col("content_length"))).alias("cl")] if fused else []
+
     stats = (
         expanded.agg(
             F.count(F.when(kind0 & F.col("success"), 1)).alias("ok"),
             F.count(F.when(kind0 & F.col("success") & matched_pred, 1)).alias("m"),
             F.count(F.when(F.col("kind") == 1, 1)).alias("links"),
+            *matched_length(kind0 & F.col("success") & matched_pred),
         )
         .unionByName(
             final_part.agg(
                 F.count(F.when(F.col("success"), 1)).alias("ok"),
                 F.count(F.when(F.col("success") & matched_pred, 1)).alias("m"),
                 F.count(F.lit(None)).alias("links"),
+                *matched_length(F.col("success") & matched_pred),
             )
         )
-        .agg(F.sum("ok").alias("ok"), F.sum("m").alias("m"), F.sum("links").alias("links"))
+        .agg(F.sum("ok").alias("ok"), F.sum("m").alias("m"), F.sum("links").alias("links"),
+             *([F.sum("cl").alias("cl")] if fused else []))
         .collect()[0]
     )
     n_visited, n_ok = n_frontier, int(stats["ok"])
     matched_count, n_links = int(stats["m"]), int(stats["links"])
+    content_length = int(stats["cl"] or 0) if fused else None
 
     visit_rows = expanded.filter(kind0).select(*visit_cols).unionByName(final_part)
     if broadcast_path:  # frontier rows with no stored page = fetch failures
@@ -243,9 +256,12 @@ def run_round(
         )
         visits = visits.filter(F.col("arrival_rank") <= stop)
         vrow = visits.agg(
-            F.count(F.lit(1)).alias("v"), F.count(F.when(F.col("success"), 1)).alias("ok")
+            F.count(F.lit(1)).alias("v"), F.count(F.when(F.col("success"), 1)).alias("ok"),
+            *matched_length(F.col("matched")),
         ).collect()[0]
         n_visited, n_ok = int(vrow["v"]), int(vrow["ok"])
+        if fused:
+            content_length = int(vrow["cl"] or 0)
 
     visits = visits.withColumn("seq", (F.lit(seq_base) + F.col("arrival_rank")).cast("long"))
 
@@ -280,6 +296,7 @@ def run_round(
             truncated=truncated,
             lineage=lineage,
             caches=caches,
+            content_length=content_length,
         )
 
     # ---- candidate links (already expanded above; native filters only) ----
@@ -454,4 +471,5 @@ def run_round(
         truncated=truncated,
         lineage=lineage,
         caches=caches,
+        content_length=content_length,
     )

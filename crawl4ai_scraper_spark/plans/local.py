@@ -9,8 +9,9 @@ writes the same checkpoint as a Spark round:
     fetch     frontier ⋈ pages, read straight from the table's ``pbucket=``
               dirs (pyarrow, url ``in`` filter), plus misses with html=null —
               the rows the Spark tier's broadcast join yields, duplicates too
-    visit     the SAME ``visit_and_expand`` batch function the Spark tier
-              hands to ``mapInPandas`` — there is no second kernel
+    visit     ``kernel.expand.expand_rows``, the kernel the Spark tier's
+              ``mapInPandas`` batch function wraps — there is no second
+              kernel — fanned out over every core of the driver (below)
     relational steps of ``run_round`` / ``virtual_schedule``: the exact
               mid-level budget cut, the same-domain filter, first appender
               (min ``(parent_seq, link_pos)``), the anti-join against the
@@ -19,6 +20,19 @@ writes the same checkpoint as a Spark round:
 
 The enqueued set is read once with pyarrow when a crawl enters this tier and
 kept in memory while it stays here (``LocalState``).
+
+Fan-out: the visit pass cuts the fetched rows into one contiguous chunk per
+core (``os.sched_getaffinity``), of about equal html bytes. The driver runs
+chunk 0 itself and ``kernel.pool`` workers (cores − 1 ``python -m``
+subprocesses that import only ``kernel``) run the rest; the column lists are
+joined in chunk order, so the frame is the one a single in-process call
+gives. A round with fewer than two rows per core, or a 1-core driver, runs
+in process. The workers start at the first round that fans out and serve
+every later round and crawl of the process. They exit at EOF on their
+stdin: at interpreter exit (an ``atexit`` hook closes the pipes and waits),
+or when the driver dies. A worker that dies or fails fails its round before
+the commit (no manifest; a resume replays the round) and closes the pool,
+which the next fan-out round starts afresh.
 
 Scope: FIFO order with the default preset's features. ``local_scope`` returns
 None — every round runs in the Spark tier — for robots rules, hygiene, URL
@@ -30,14 +44,15 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import Dict, Optional, Set
+from typing import Dict, List, Optional, Set
 
 import numpy as np
 import pandas as pd
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from crawl4ai_scraper_spark.config import CrawlJobConfig
-from crawl4ai_scraper_spark.functions.udfs import visit_and_expand
+from crawl4ai_scraper_spark.kernel import pool
+from crawl4ai_scraper_spark.kernel.expand import Row, expand_rows
 from crawl4ai_scraper_spark.kernel.urls import match_url_pattern
 from crawl4ai_scraper_spark.plans.checkpoint import (
     FRONTIER_FILE_SCHEMA,
@@ -96,6 +111,7 @@ class LocalRound:
     new_frontier: pd.DataFrame  # FRONTIER_FILE_SCHEMA columns, in rank order
     counts: Dict[str, int]
     truncated: bool
+    content_length: Optional[int]  # fused: sum over the matched visits
 
     def schedule(self, round_vt: float, delay: float) -> float:
         """``virtual_schedule`` without host rules: the i-th visit (0-based,
@@ -137,15 +153,35 @@ def _fetch(pages_root: str, frontier: pd.DataFrame, n_buckets: int) -> pd.DataFr
     return pd.concat([hits, misses], ignore_index=True)
 
 
+def _chunks(rows: List[Row], n: int) -> List[List[Row]]:
+    """``n`` contiguous chunks of about equal html bytes (a row weighs its
+    html length plus a fixed per-row cost, so a chunk of fetch misses is
+    not free)."""
+    weight = np.cumsum([len(r[4]) + 512 if r[4] is not None else 512 for r in rows])
+    cuts = np.searchsorted(weight, weight[-1] * np.arange(1, n) / n).tolist()
+    return [rows[a:b] for a, b in zip([0] + cuts, cuts + [len(rows)])]
+
+
+def _visit(max_depth: int, extraction: Optional[dict], fetched: pd.DataFrame) -> pd.DataFrame:
+    """``expand_rows`` over the fetched rows, fanned out over every core of
+    the driver when each core gets at least two rows; the frame is the one
+    a single in-process call gives."""
+    rows = list(zip(*(fetched[c].tolist() for c in ("url", "host", "depth", "arrival_rank",
+                                                     "html"))))
+    cores = len(os.sched_getaffinity(0))
+    if cores == 1 or len(rows) < 2 * cores:
+        return pd.DataFrame(expand_rows(max_depth, extraction, rows))
+    parts = pool.map_expand(max_depth, extraction, _chunks(rows, cores))
+    return pd.DataFrame({c: [v for p in parts for v in p[c]] for c in parts[0]})
+
+
 def expand_round(state: LocalState, pages_root: str, cfg: CrawlJobConfig, seed_domain: str,
                  seq_base: int, discovered_so_far: int, n_buckets: int,
                  extraction: Optional[dict] = None) -> LocalRound:
     """One BFS round up to (not including) the schedule and the commit —
     the local counterpart of ``frontier.run_round``."""
     n_frontier = len(state.frontier)
-    fetched = _fetch(pages_root, state.frontier, n_buckets)
-    out = pd.concat(list(visit_and_expand(cfg.max_depth, extraction)(iter([fetched]))),
-                    ignore_index=True)
+    out = _visit(cfg.max_depth, extraction, _fetch(pages_root, state.frontier, n_buckets))
     is_visit = out["kind"] == 0
     visits = out[is_visit].drop(columns=["kind", "link_pos", "child_url", "child_domain",
                                          "child_host"])
@@ -167,6 +203,8 @@ def expand_round(state: LocalState, pages_root: str, cfg: CrawlJobConfig, seed_d
         visits = visits[visits["arrival_rank"] <= stop]
         links = links[links["arrival_rank"] <= stop]
         n_visited, n_ok = len(visits), int(visits["success"].sum())
+    content_length = (None if extraction is None
+                      else int(visits.loc[visits["matched"], "content_length"].sum()))
     visits = visits.assign(seq=(seq_base + visits["arrival_rank"]).astype("int64"))
 
     cand = pd.DataFrame({
@@ -202,7 +240,7 @@ def expand_round(state: LocalState, pages_root: str, cfg: CrawlJobConfig, seed_d
         "frontier_out": len(new_frontier),
         "links_total": len(out) - int(is_visit.sum()),
     }
-    return LocalRound(visits, new_frontier, counts, truncated)
+    return LocalRound(visits, new_frontier, counts, truncated, content_length)
 
 
 def commit_round_local(chk_dir: str, rnd: int, lr: LocalRound, fused: bool, meta: Dict) -> None:

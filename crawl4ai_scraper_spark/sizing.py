@@ -58,15 +58,19 @@ DRIVER_MIN_GB = 12
 
 # Driver-local round tier (plans/local.py): the largest round (frontier rows,
 # and enqueued rows) that runs on the driver. Measured on a 4-vCPU host with
-# fused extraction, both tiers forced, warm JVM (scripts/tier_crossover.py):
-# rounds of 1-1,279 rows took 2.0-4.6 s in Spark whatever their size and at
-# most 1.1 s locally; rounds of 2,401 / 3,199 / 4,801 / 6,399 / 9,601 /
-# 12,799 rows took 2.1-2.6 / 2.0-2.2 / 4.1-5.0 / 3.7-4.3 / 8.0-10.4 /
-# 8.1-8.4 s locally and 3.5-4.2 / 3.2-4.3 / 4.0-6.1 / 4.0-5.1 / 5.7-6.1 /
-# 5.1-6.0 s in Spark. Only one core count has been measured, so the bound is
-# one constant, not a function of the cores; it keeps 10^5-row rounds on
-# Spark on any host.
-LOCAL_ROUND_MAX = 4_000
+# fused extraction, both tiers forced, warm JVM, the local visit pass fanned
+# out over the 4 cores (scripts/tier_crossover.py, two crawls per tier):
+# rounds of 1-1,279 rows took 1.3-4.0 s in Spark whatever their size and at
+# most 0.84 s locally; rounds of 2,401 / 3,199 / 4,801 / 6,399 / 9,601 /
+# 12,799 / 19,201 / 25,599 rows took 0.5-0.7 / 0.5 / 1.0-1.2 / 0.9-1.1 /
+# 2.3-2.8 / 1.6-2.1 / 4.2-4.3 / 3.9 s locally and 2.2-2.5 / 1.9-2.5 /
+# 2.9-3.3 / 2.4-3.2 / 4.3-4.9 / 3.8-4.3 / 7.7-8.5 / 6.3-7.6 s in Spark; at
+# 38,401 / 51,199 rows the tiers were close (11.6-12.6 / 8.9-9.8 s locally,
+# 11.9-14.0 / 10.7-11.2 s in Spark). The bound sits between the largest
+# round measured where local wins by at least 1.6x and that tie. Only one
+# core count has been measured, so the bound is one constant, not a function
+# of the cores; it keeps 10^5-row rounds on Spark on any host.
+LOCAL_ROUND_MAX = 30_000
 
 
 @dataclass

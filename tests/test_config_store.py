@@ -5,6 +5,8 @@ import json
 import sys
 from pathlib import Path
 
+import pytest
+
 from crawl4ai_scraper_spark.config import (
     PRESETS,
     ConfigStore,
@@ -52,6 +54,35 @@ def test_import_rejects_invalid(tmp_path):
     bad = tmp_path / "bad.json"
     bad.write_text(json.dumps({"settings": {"no_such_field": 1}}))
     assert store.import_config(bad) is None
+
+
+def test_stored_config_with_removed_field_loads(tmp_path):
+    """A config saved while a since-removed field existed still loads on
+    every path, without that field and with a warning that names it; a key
+    that was never a field is still rejected."""
+    import warnings
+
+    from crawl4ai_scraper_spark.config import REMOVED_FIELDS
+
+    assert "defer_stats_max_frontier" in REMOVED_FIELDS
+    store = ConfigStore(tmp_path / "store")
+    cfg = CrawlJobConfig(max_pages=33)
+    settings = dict(vars(cfg), defer_stats_max_frontier=1_000_000)
+    (tmp_path / "store" / "old.json").write_text(json.dumps({"name": "old", "settings": settings}))
+    (tmp_path / "old.json").write_text(json.dumps({"name": "imp", "settings": settings}))
+    (tmp_path / "crawl_config.json").write_text(json.dumps(settings))
+    for load in (lambda: store.load("old"),
+                 lambda: CrawlJobConfig.load(tmp_path / "crawl_config.json"),
+                 lambda: store.load(store.import_config(tmp_path / "old.json"))):
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            assert load() == cfg
+        assert any("defer_stats_max_frontier" in str(w.message) for w in caught)
+    # the re-saved import no longer holds the removed field
+    assert "defer_stats_max_frontier" not in json.loads(
+        (tmp_path / "store" / "imp.json").read_text())["settings"]
+    with pytest.raises(TypeError, match="no_such_field"):
+        CrawlJobConfig.from_settings(dict(settings, no_such_field=1))
 
 
 def test_repo_conf_presets_exist_and_load():

@@ -89,7 +89,8 @@ def test_tiers_commit_equal_rounds(spark, pages3, chk_dir):
     run_crawl(spark, pages3, SEED, cfg, chk_s, tier="spark")
     assert _counts(chk_l) == _counts(chk_s)
     last = latest_round(chk_s)
-    for key in ("seq_base", "discovered", "frontier_n", "enqueued_n", "round_vt", "done"):
+    for key in ("seq_base", "discovered", "total_content_length", "frontier_n", "enqueued_n",
+                "round_vt", "done"):
         assert load_manifest(chk_l, last)[key] == load_manifest(chk_s, last)[key], key
     for rnd in range(1, last + 1):
         f_l, f_s = (sorted(tuple(r) for r in read_frontier(spark, c, rnd).collect())
@@ -160,6 +161,43 @@ def test_local_rounds_start_no_spark_job(spark, pages3, web3, chk_dir):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     assert tiers(chk_dir) == ["local"] * 3
     assert_oracle_equal(res, oracle_discover(fetch, SEED, cfg), False)
+
+
+def test_fused_local_crawl_starts_no_spark_job(spark, pages3, web3, chk_dir):
+    """With every round local, a fused crawl's summary comes from the last
+    manifest's running totals: the crawl, its tail included, starts no job."""
+    _, _, fetch = web3
+    cfg = CrawlJobConfig(max_depth=3, max_pages=40)
+    sc = spark.sparkContext
+    group = "local-tier-fused"
+    sc.setJobGroup(group, group)
+    try:
+        res = run_crawl(spark, pages3, SEED, cfg, chk_dir, tier="local")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert_oracle_equal(res, oracle_crawl(fetch, SEED, cfg), True)
+    assert load_manifest(chk_dir, 3)["total_content_length"] == \
+        oracle_crawl(fetch, SEED, cfg).summary["total_content_length"]
+
+
+@pytest.mark.parametrize("then", ["local", "spark"])
+def test_resume_without_content_total_runs_summary_agg(spark, pages3, web3, chk_dir, then):
+    """A fused checkpoint whose manifests predate ``total_content_length``
+    resumes in either tier and gets its summary from the aggregate."""
+    import json
+
+    _, _, fetch = web3
+    cfg = CrawlJobConfig(max_depth=3, max_pages=40)
+    run_crawl(spark, pages3, SEED, cfg, chk_dir, max_rounds=2, tier="local")
+    for rnd in range(3):
+        path = os.path.join(round_dir(chk_dir, rnd), "manifest.json")
+        manifest = json.load(open(path))
+        del manifest["total_content_length"]
+        json.dump(manifest, open(path, "w"))
+    res = run_crawl(spark, pages3, SEED, cfg, chk_dir, resume=True, tier=then)
+    assert_oracle_equal(res, oracle_crawl(fetch, SEED, cfg), True)
+    assert load_manifest(chk_dir, 3)["total_content_length"] is None
 
 
 def test_out_of_scope_crawls_pick_spark_tier(spark, pages3):
