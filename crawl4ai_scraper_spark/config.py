@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import json
 import warnings
-from dataclasses import asdict, dataclass, field, fields
+from dataclasses import asdict, dataclass, field
 from pathlib import Path
 from typing import List, Optional
 
@@ -131,15 +131,11 @@ class CrawlJobConfig:
         """A config from stored settings. A field that an earlier version
         stored and this one removed (``REMOVED_FIELDS``) is dropped with a
         warning that names it, so configs saved before the removal still
-        load; any other unknown key is an error that names it."""
-        names = {f.name for f in fields(cls)}
+        load; any other unknown key is the constructor's ``TypeError``."""
         removed = sorted(k for k in settings if k in REMOVED_FIELDS)
-        unknown = sorted(k for k in settings if k not in names and k not in REMOVED_FIELDS)
-        if unknown:
-            raise TypeError(f"unknown config fields: {', '.join(unknown)}")
         if removed:
             warnings.warn(f"ignoring removed config fields: {', '.join(removed)}", stacklevel=2)
-        return cls(**{k: v for k, v in settings.items() if k in names})
+        return cls(**{k: v for k, v in settings.items() if k not in REMOVED_FIELDS})
 
 
 # Fields that stored configs may still hold but that no longer exist:

@@ -22,7 +22,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 from crawl4ai_scraper_spark.kernel.cleaning import CleaningConfig
-from crawl4ai_scraper_spark.kernel.expand import DOC_COLS as _DOC_COLS
 from crawl4ai_scraper_spark.kernel.expand import expand_rows
 from crawl4ai_scraper_spark.kernel.extraction import extract_record
 from crawl4ai_scraper_spark.kernel.naming import output_rel_path

@@ -30,11 +30,6 @@ DOC_COLS = ("title", "description", "markdown", "content_length", "links_count",
             "user_agent", "rel_path")
 
 
-def expand_columns(extraction: Optional[dict]) -> Tuple[str, ...]:
-    """The output columns of ``expand_rows``, in order."""
-    return EXPAND_COLS if extraction is None else EXPAND_COLS + DOC_COLS + ("doc_matched",)
-
-
 def expand_rows(max_depth: int, extraction: Optional[dict],
                 rows: Iterable[Row]) -> Dict[str, List]:
     """Fetched rows → column lists: one VISIT row (kind=0) per page plus one
@@ -57,7 +52,8 @@ def expand_rows(max_depth: int, extraction: Optional[dict],
             "patterns": extraction.get("patterns") or [],
             "exclude": extraction.get("exclude_patterns") or [],
         }
-    out = {k: [] for k in expand_columns(extraction)}
+    cols = EXPAND_COLS if extraction is None else EXPAND_COLS + DOC_COLS + ("doc_matched",)
+    out = {k: [] for k in cols}
     for url, host, depth, rank, html in rows:
         ok = html is not None
         out["kind"].append(0)

@@ -20,11 +20,20 @@ driver. Lifecycle:
   starts from fresh workers with empty pipes.
 
 One lock serialises the pool between threads.
+
+Width: one worker per usable core but one (``usable_cores``: the CPU
+affinity, or ``os.cpu_count`` where the platform has no affinity call,
+bounded by the cgroup CPU quota). No further cap: a worker holds its
+imports (about 22 MB) plus what its largest chunk left in its heap (47-48
+MB in all after a 25,000-row fused round on 4 cores), and a round's rows are
+split across the workers, not copied to each, so the chunk share shrinks as
+the width grows.
 """
 
 from __future__ import annotations
 
 import atexit
+import math
 import os
 import pickle
 import signal
@@ -42,6 +51,56 @@ _MODULE = "crawl4ai_scraper_spark.kernel.pool"
 # the directory (or the --py-files zip) that holds the package, for the
 # workers' import path
 _ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_PROC_CGROUP = "/proc/self/cgroup"
+_CGROUP_FS = "/sys/fs/cgroup"
+
+
+def usable_cores() -> int:
+    """The cores this process may run on: its CPU affinity (``os.cpu_count``
+    where there is no ``os.sched_getaffinity``, as on macOS and Windows),
+    bounded by the cgroup CPU quota, which affinity does not see."""
+    try:
+        cores = len(os.sched_getaffinity(0))
+    except AttributeError:
+        cores = os.cpu_count() or 1
+    quota = _cpu_quota()
+    return min(cores, quota) if quota else cores
+
+
+def _read_words(path: str) -> List[str]:
+    with open(path) as fh:
+        return fh.read().split()
+
+
+def _cpu_quota() -> Optional[int]:
+    """This process's cgroup CPU quota in whole cores, rounded up (v2
+    ``cpu.max``, v1 ``cpu.cfs_quota_us`` / ``cpu.cfs_period_us``), or None
+    where none is set or none can be read. The cgroup's own directory and
+    the controller's mount root are both read: a container without a cgroup
+    namespace sees its host path in ``/proc/self/cgroup`` but has its own
+    cgroup mounted at the root."""
+    try:
+        with open(_PROC_CGROUP) as fh:
+            entries = [line.rstrip("\n").split(":", 2) for line in fh if line.count(":") >= 2]
+    except OSError:
+        return None
+    quotas = []
+    for _, controllers, path in entries:
+        if controllers == "":
+            mount, files = _CGROUP_FS, ("cpu.max",)
+        elif "cpu" in controllers.split(","):
+            mount, files = os.path.join(_CGROUP_FS, controllers), ("cpu.cfs_quota_us",
+                                                                   "cpu.cfs_period_us")
+        else:
+            continue
+        for d in {mount + path.rstrip("/"), mount}:
+            try:
+                quota, period = [w for f in files for w in _read_words(os.path.join(d, f))]
+            except (OSError, ValueError):
+                continue
+            if quota not in ("max", "-1"):
+                quotas.append(max(1, math.ceil(int(quota) / int(period))))
+    return min(quotas) if quotas else None
 
 
 def _send(fh, obj) -> None:
@@ -130,10 +189,6 @@ def map_expand(max_depth: int, extraction: Optional[dict],
     """``expand_rows`` over each chunk, in chunk order: chunk 0 in this
     process, chunk i in worker i-1. Raises if any chunk fails."""
     return _POOL.map_expand(max_depth, extraction, chunks)
-
-
-def worker_pids() -> List[int]:
-    return [proc.pid for proc in _POOL.workers]
 
 
 def close() -> None:

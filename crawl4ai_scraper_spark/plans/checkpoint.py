@@ -94,7 +94,7 @@ VISITED_SCHEMA = _schema(
     ("seq", LongType()), ("success", BooleanType()), ("matched", BooleanType()),
     ("sched_ts", DoubleType()), ("arrival_rank", LongType()),
 )
-# fused extraction widens visited with the extracted record (udfs._DOC_COLS)
+# fused extraction widens visited with the extracted record (kernel.expand.DOC_COLS)
 FUSED_VISITED_SCHEMA = StructType(VISITED_SCHEMA.fields + _schema(
     ("title", StringType()), ("description", StringType()), ("markdown", StringType()),
     ("content_length", LongType()), ("links_count", LongType()),

@@ -36,12 +36,12 @@ from pyspark.sql import functions as F
 
 from crawl4ai_scraper_spark.config import CrawlJobConfig
 from crawl4ai_scraper_spark.functions.udfs import (
-    _DOC_COLS,
     VISIT_EXPAND_DOC_SCHEMA,
     VISIT_EXPAND_SCHEMA,
     include_exclude_predicate,
     visit_and_expand,
 )
+from crawl4ai_scraper_spark.kernel.expand import DOC_COLS
 from crawl4ai_scraper_spark.plans.bloom import AnyBloom, might_contain_col
 from crawl4ai_scraper_spark.plans.checkpoint import FRONTIER_FILE_SCHEMA
 from crawl4ai_scraper_spark.plans.politeness import (
@@ -148,9 +148,9 @@ def run_round(
     doc_nulls = []
     if extraction is not None:
         expand_schema = VISIT_EXPAND_DOC_SCHEMA
-        visit_cols = visit_cols + list(_DOC_COLS) + ["doc_matched"]
+        visit_cols = visit_cols + list(DOC_COLS) + ["doc_matched"]
         doc_nulls = [F.lit(None).cast("long" if c in ("content_length", "links_count")
-                                      else "string").alias(c) for c in _DOC_COLS]
+                                      else "string").alias(c) for c in DOC_COLS]
         doc_nulls.append(F.lit(None).cast("boolean").alias("doc_matched"))
     # Only rows that will EXPAND need the html column; frontier rows already
     # at max_depth only need an existence probe, so their join reads the
@@ -287,7 +287,7 @@ def run_round(
         return RoundResult(
             visits=visits.select("url", "host", "depth", "seq", "success", "matched",
                                  "arrival_rank",
-                                 *(list(_DOC_COLS) if extraction is not None else [])),
+                                 *(list(DOC_COLS) if extraction is not None else [])),
             new_frontier=new_frontier,
             new_edges=spark.createDataFrame(
                 [], "parent_url string, child_url string, link_pos int"
@@ -464,7 +464,7 @@ def run_round(
 
     return RoundResult(
         visits=visits.select("url", "host", "depth", "seq", "success", "matched", "arrival_rank",
-                             *(list(_DOC_COLS) if extraction is not None else [])),
+                             *(list(DOC_COLS) if extraction is not None else [])),
         new_frontier=new_frontier,
         new_edges=new_edges,
         counts=counts,

@@ -22,7 +22,7 @@ The enqueued set is read once with pyarrow when a crawl enters this tier and
 kept in memory while it stays here (``LocalState``).
 
 Fan-out: the visit pass cuts the fetched rows into one contiguous chunk per
-core (``os.sched_getaffinity``), of about equal html bytes. The driver runs
+core (``pool.usable_cores``), of equal row count. The driver runs
 chunk 0 itself and ``kernel.pool`` workers (cores − 1 ``python -m``
 subprocesses that import only ``kernel``) run the rest; the column lists are
 joined in chunk order, so the frame is the one a single in-process call
@@ -44,7 +44,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from typing import Dict, List, Optional, Set
+from typing import Dict, Optional, Set
 
 import numpy as np
 import pandas as pd
@@ -52,7 +52,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from crawl4ai_scraper_spark.config import CrawlJobConfig
 from crawl4ai_scraper_spark.kernel import pool
-from crawl4ai_scraper_spark.kernel.expand import Row, expand_rows
+from crawl4ai_scraper_spark.kernel.expand import expand_rows
 from crawl4ai_scraper_spark.kernel.urls import match_url_pattern
 from crawl4ai_scraper_spark.plans.checkpoint import (
     FRONTIER_FILE_SCHEMA,
@@ -153,25 +153,17 @@ def _fetch(pages_root: str, frontier: pd.DataFrame, n_buckets: int) -> pd.DataFr
     return pd.concat([hits, misses], ignore_index=True)
 
 
-def _chunks(rows: List[Row], n: int) -> List[List[Row]]:
-    """``n`` contiguous chunks of about equal html bytes (a row weighs its
-    html length plus a fixed per-row cost, so a chunk of fetch misses is
-    not free)."""
-    weight = np.cumsum([len(r[4]) + 512 if r[4] is not None else 512 for r in rows])
-    cuts = np.searchsorted(weight, weight[-1] * np.arange(1, n) / n).tolist()
-    return [rows[a:b] for a, b in zip([0] + cuts, cuts + [len(rows)])]
-
-
 def _visit(max_depth: int, extraction: Optional[dict], fetched: pd.DataFrame) -> pd.DataFrame:
     """``expand_rows`` over the fetched rows, fanned out over every core of
     the driver when each core gets at least two rows; the frame is the one
     a single in-process call gives."""
     rows = list(zip(*(fetched[c].tolist() for c in ("url", "host", "depth", "arrival_rank",
                                                      "html"))))
-    cores = len(os.sched_getaffinity(0))
+    cores = pool.usable_cores()
     if cores == 1 or len(rows) < 2 * cores:
         return pd.DataFrame(expand_rows(max_depth, extraction, rows))
-    parts = pool.map_expand(max_depth, extraction, _chunks(rows, cores))
+    chunks = [rows[i * len(rows) // cores:(i + 1) * len(rows) // cores] for i in range(cores)]
+    parts = pool.map_expand(max_depth, extraction, chunks)
     return pd.DataFrame({c: [v for p in parts for v in p[c]] for c in parts[0]})
 
 
