@@ -429,7 +429,9 @@ def round_write_stats(chk_dir: str, rnd: int) -> Tuple[int, Optional[float]]:
 
 def read_state(spark: SparkSession, chk_dir: str, name: str, upto_round: int) -> DataFrame:
     """Cumulative view of a delta table at round ``upto_round`` (inclusive).
-    The round filter is partition pruning — orphan rounds never get read.
+    The round filter is partition pruning — orphan rounds never get read;
+    it is a SQL predicate string, one gateway call instead of a Column
+    tree's round trips.
     The visited schema follows the manifest's ``fused`` flag; a table no
     round has written yet (a bootstrap-only checkpoint) reads as empty."""
     if name == "visited":
@@ -443,7 +445,7 @@ def read_state(spark: SparkSession, chk_dir: str, name: str, upto_round: int) ->
     if not os.path.isdir(path):
         return spark.createDataFrame([], schema)
     return (spark.read.schema(schema).parquet(spark_path(path))
-            .filter(F.col("round") <= upto_round))
+            .where(f"`round` <= {int(upto_round)}"))
 
 
 # --- frontier-snapshot compaction -------------------------------------------

@@ -44,6 +44,16 @@ documents' ``content_length`` to the manifest's ``total_content_length``, so
 the summary is read from the last manifest (a checkpoint written before
 manifests carried the total, and ``extract_pass``, still aggregate). A crawl
 whose rounds all ran locally starts no Spark job.
+
+The result (``CrawlResult``) holds three frames, all lazy views over the
+committed checkpoint and all built before ``run_crawl`` returns: ``visited``,
+``discovered`` and ``documents`` (``None`` when the crawl did not extract).
+The tail builds them from one visited read and one ``matched`` filter, and
+the documents view is one projection with its ``formatted`` payload
+included. The link graph and the per-partition lineage are not returned;
+they are checkpoint views as well, read with
+``checkpoint.read_edges(spark, chk_dir, res.rounds)`` and
+``checkpoint.read_state(spark, chk_dir, "lineage", res.rounds)``.
 """
 
 from __future__ import annotations
@@ -74,6 +84,8 @@ from crawl4ai_scraper_spark.plans.checkpoint import (
     frontier_rows,
     latest_round,
     load_manifest,
+    # not called here: perfbench/tracing.py patches ``driver.read_edges`` by
+    # name, so the name stays until the tracer drops that entry
     read_edges,
     read_enqueued,
     read_frontier,
@@ -98,13 +110,19 @@ RUN_TS_ISO = "2025-01-01T00:00:00"  # virtual clock epoch: reproducible crawled_
 
 @dataclass
 class CrawlResult:
-    visited: DataFrame      # url, host, depth, seq, success, matched, sched_ts, round
+    """The frames a crawl returns, each a lazy view over the committed
+    checkpoint, built before ``run_crawl`` returns. The link graph and the
+    per-partition lineage are not returned: read them from the checkpoint
+    with ``checkpoint.read_edges(spark, chk, res.rounds)`` and
+    ``checkpoint.read_state(spark, chk, "lineage", res.rounds)``."""
+
+    # url, host, depth, seq, success, matched, sched_ts, round; + DOC_COLS if fused
+    visited: DataFrame
     discovered: DataFrame   # url — pattern-matched successes, sorted (O-27)
-    edges: DataFrame        # parent_url, child_url, link_pos, round
-    lineage: DataFrame      # round, stage, partition, rows
+    # documents_out, ``formatted`` included; None when the crawl did not extract
     documents: Optional[DataFrame]
-    summary: Dict
-    rounds: int
+    summary: Dict           # crawl_summary.json + rounds, discovered (+ trap_templates)
+    rounds: int             # the last committed round
 
 
 def run_crawl(
@@ -131,7 +149,10 @@ def run_crawl(
     differs), so a resume continues in the mode its first run chose:
     ``extract=True`` on a discovery checkpoint finishes discovery and then
     extracts the discovered pages in one ``extract_pass``, and
-    ``extract=False`` on a fused checkpoint returns ``documents=None``."""
+    ``extract=False`` on a fused checkpoint returns ``documents=None``.
+
+    Returns visited, discovered and documents (see ``CrawlResult``); edges
+    and lineage are read from ``chk_dir`` through ``plans.checkpoint``."""
     seed_domain = extract_domain(seed_url)
     # The fetch join computes pbucket = pmod(xxhash64(url), N); N MUST equal
     # the modulus the pages table was written with or lookups silently miss.
@@ -430,10 +451,11 @@ def run_crawl(
     # (_finalize_pending cleans up after itself on failure; the round simply
     # stays uncommitted and a resume replays it)
     _finalize_pending()
+    # each JVM analysis costs gateway round trips: discovered and documents
+    # share one matched filter
     visited = read_state(spark, chk_dir, "visited", last)
-    edges = read_edges(spark, chk_dir, last)
-    lineage = read_state(spark, chk_dir, "lineage", last)
-    discovered = visited.filter("matched").select("url").orderBy("url")  # O-27 sorted output
+    matched = visited.where("matched")
+    discovered = matched.select("url").orderBy("url")  # O-27 sorted output
 
     documents, summary = (None, {})
     if extract and fused:
@@ -441,7 +463,7 @@ def run_crawl(
         if content_total is not None:  # every document is a matched visit
             known = {"total_urls": discovered_n, "successful": discovered_n, "failed": 0,
                      "total_content_length": content_total}
-        documents, summary = fused_documents(spark, visited, cfg, chk_dir, summary=known)
+        documents, summary = fused_documents(spark, matched, cfg, chk_dir, summary=known)
     elif extract:
         documents, summary = extract_pass(spark, pages, discovered, cfg, chk_dir, n_buckets,
                                           n_discovered=discovered_n)
@@ -450,10 +472,8 @@ def run_crawl(
     if cfg.trap_screen:
         summary["trap_templates"] = sorted(trap_templates)
 
-    return CrawlResult(
-        visited=visited, discovered=discovered, edges=edges, lineage=lineage,
-        documents=documents, summary=summary, rounds=last,
-    )
+    return CrawlResult(visited=visited, discovered=discovered, documents=documents,
+                       summary=summary, rounds=last)
 
 
 def extract_pass(
@@ -483,48 +503,56 @@ def extract_pass(
             naming=(cfg.organization_strategy, cfg.naming_convention, RUN_TS_ISO),
         ),
         EXTRACTED_SCHEMA,
-    )
-    return _finalize_documents(spark, docs, cfg, chk_dir)
+    ).withColumn("formatted", F.expr(_formatted_sql(cfg)))
+    return _finalize_documents(spark, docs, chk_dir)
 
 
 def fused_documents(
     spark: SparkSession,
-    visited: DataFrame,
+    matched: DataFrame,
     cfg: CrawlJobConfig,
     chk_dir: str,
     summary: Optional[Dict] = None,
 ) -> tuple[DataFrame, Dict]:
-    """documents_out from FUSED visit rows — the matched visits already carry
-    the extracted record (visit_and_expand with extraction), AND that content
-    is already durable in the committed visited snapshots, so the documents
-    table is a lazy VIEW over them (formatting is native concat) — no second
-    pages scan and no redundant re-write of ~N GB of text. The summary
+    """documents_out from the FUSED visit rows that matched — they already
+    carry the extracted record (visit_and_expand with extraction), AND that
+    content is already durable in the committed visited snapshots, so the
+    documents table is a lazy VIEW over them: one projection, formatting
+    included (native SQL, no UDF) — no second pages scan and no redundant
+    re-write of ~N GB of text. ``crawled_at`` and ``success`` are lateral
+    aliases that the ``formatted`` expression reads. The summary
     (crawl_summary.json) is ``summary`` when the caller knows it from the
     manifest, else one aggregate job."""
-    docs = visited.filter("matched").select(
+    docs = matched.selectExpr(
         "url", "title", "description", "markdown", "content_length", "links_count",
-        F.lit(RUN_TS_ISO).alias("crawled_at"), F.lit(True).alias("success"),
-        "user_agent", F.lit(None).cast("string").alias("error"), "rel_path",
+        f"'{RUN_TS_ISO}' AS crawled_at", "true AS success",
+        "user_agent", "CAST(NULL AS STRING) AS error", "rel_path",
+        f"{_formatted_sql(cfg)} AS formatted",
     )
-    return _finalize_documents(spark, docs, cfg, chk_dir, materialize=False, summary=summary)
+    return _finalize_documents(spark, docs, chk_dir, materialize=False, summary=summary)
 
 
-def _formatted_col(cfg: CrawlJobConfig) -> F.Column:
-    """The file-payload column. With metadata: YAML-ish front matter, built
-    NATIVELY (JVM concat — no UDF), matching kernel.naming.format_with_metadata
-    byte for byte."""
-    if not cfg.include_metadata:
-        return F.coalesce(F.col("markdown"), F.lit(""))
-    return F.concat(
-        F.lit("---\nurl: "), F.col("url"),
-        F.lit("\ntitle: "), F.coalesce(F.col("title"), F.lit("Untitled")),
-        F.lit("\ndescription: "), F.coalesce(F.col("description"), F.lit("")),
-        F.lit("\ncrawled_at: "), F.col("crawled_at"),
-        F.lit("\ncontent_length: "), F.col("content_length").cast("string"),
-        F.lit("\ncapture_mode: enhanced\n---\n# "),
-        F.coalesce(F.col("title"), F.lit("Untitled")),
-        F.lit("\n\n"), F.coalesce(F.col("markdown"), F.lit("")),
-    )
+# The file payload with metadata: YAML-ish front matter built NATIVELY (SQL
+# concat, no UDF), matching kernel.naming.format_with_metadata byte for byte
+# (tests/test_documents_formatted.py). Each ``\\n`` here hands the SQL
+# parser a backslash-n escape, which it reads as a newline.
+FRONT_MATTER_SQL = (
+    "concat('---\\nurl: ', url, "
+    "'\\ntitle: ', coalesce(title, 'Untitled'), "
+    "'\\ndescription: ', coalesce(description, ''), "
+    "'\\ncrawled_at: ', crawled_at, "
+    "'\\ncontent_length: ', CAST(content_length AS STRING), "
+    "'\\ncapture_mode: enhanced\\n---\\n# ', coalesce(title, 'Untitled'), "
+    "'\\n\\n', coalesce(markdown, ''))"
+)
+
+
+def _formatted_sql(cfg: CrawlJobConfig) -> str:
+    """The ``formatted`` column of a documents row, as one SQL expression:
+    the front matter with metadata, else the bare markdown; null for a
+    failed row."""
+    body = FRONT_MATTER_SQL if cfg.include_metadata else "coalesce(markdown, '')"
+    return f"CASE WHEN success THEN {body} END"
 
 
 def rematerialize_documents(
@@ -550,7 +578,7 @@ def rematerialize_documents(
     out = docs.withColumn(
         "rel_path",
         F.when(F.col("success"), path_udf(F.col("url"), F.col("title"))),
-    ).withColumn("formatted", F.when(F.col("success"), _formatted_col(cfg)))
+    ).withColumn("formatted", F.expr(_formatted_sql(cfg)))
     if out_dir:
         out.write.mode("overwrite").parquet(out_dir)
         out = spark.read.parquet(spark_path(out_dir))
@@ -560,13 +588,10 @@ def rematerialize_documents(
 def _finalize_documents(
     spark: SparkSession,
     docs: DataFrame,
-    cfg: CrawlJobConfig,
     chk_dir: str,
     materialize: bool = True,
     summary: Optional[Dict] = None,
 ) -> tuple[DataFrame, Dict]:
-    docs = docs.withColumn("formatted", F.when(F.col("success"), _formatted_col(cfg)))
-
     if materialize:
         out_dir = os.path.join(chk_dir, "outputs", "documents")
         docs.write.mode("overwrite").parquet(out_dir)

@@ -158,11 +158,14 @@ def test_robots_rules_prune_before_enqueue(spark, pages3, web3, chk_dir):
 
 
 def test_lineage_records_per_partition_counts(spark, pages3, chk_dir):
+    from crawl4ai_scraper_spark.plans.checkpoint import read_state
+
     cfg = CrawlJobConfig(max_depth=1, max_pages=20)
     res = run_crawl(spark, pages3, SEED, cfg, chk_dir, extract=False, use_bloom=False)
-    stages = {r["stage"] for r in res.lineage.select("stage").distinct().collect()}
+    lineage = read_state(spark, chk_dir, "lineage", res.rounds)
+    stages = {r["stage"] for r in lineage.select("stage").distinct().collect()}
     assert {"frontier_in", "fetched", "frontier_out"} <= stages
-    cols = set(res.lineage.columns)
+    cols = set(lineage.columns)
     assert {"stage", "partition", "rows", "round"} <= cols
 
 
